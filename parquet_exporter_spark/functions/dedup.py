@@ -248,15 +248,7 @@ def minhash_lsh_pairs(
     verified = (
         candidates.join(da, "id_a")
         .join(db, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            ).alias("jaccard"),
-        )
+        .select("id_a", "id_b", _jaccard("sh_a", "sh_b").alias("jaccard"))
         .filter(F.col("jaccard") >= jaccard_threshold)
     )
     return verified
@@ -372,6 +364,59 @@ def _banded_from_shingled(
     )
 
 
+def _jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard of two shingle-set array columns, rounded to 6 places:
+    the value every LSH pair path reports and thresholds on."""
+    return F.round(
+        F.size(F.array_intersect(a, b)).cast("double") / F.size(F.array_union(a, b)),
+        6,
+    )
+
+
+def _verified_band_pairs(
+    banded: DataFrame,
+    sh: DataFrame,
+    jaccard_threshold: float,
+    id_col: str,
+    probe: tuple[DataFrame, DataFrame] | None = None,
+    text_col: str = "text",
+) -> DataFrame:
+    """The LSH core over already-signed docs: candidate pairs from the
+    (band, band_sig) equi-join, kept where exact shingle Jaccard >=
+    threshold. Returns (id_a, id_b, jaccard).
+
+    ``banded`` is (id, band, band_sig) and ``sh`` is (id, sh) for the same
+    docs. With ``probe`` None it is the self-join, each colliding pair once
+    with id_a < id_b. With ``probe = (index, corpus)`` the docs are probed
+    against a persisted band index instead: b is the index's (id, band,
+    band_sig) rows, and the corpus is streamed past the broadcast candidate
+    pairs to fetch each candidate's (id, ``text_col``) row, which is
+    shingled only after that join — verify compute is O(candidates), and
+    the corpus is never shuffled or shingled whole. The broadcast holds
+    id pairs of one batch's band collisions, not corpus rows."""
+    banded_b, corpus = (banded, None) if probe is None else probe
+    a = banded.select(F.col(id_col).alias("id_a"), "band", "band_sig")
+    b = banded_b.select(F.col(id_col).alias("id_b"), "band", "band_sig")
+    candidates = a.join(b, ["band", "band_sig"])
+    if probe is None:
+        candidates = candidates.filter(F.col("id_a") < F.col("id_b"))
+    candidates = candidates.select("id_a", "id_b").distinct()
+    sa = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
+    if probe is None:
+        sb = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+        pairs = candidates.join(sa, "id_a").join(sb, "id_b")
+    else:
+        fetched = corpus.select(F.col(id_col).alias("id_b"), F.col(text_col))
+        pairs = (
+            fetched.join(F.broadcast(candidates), "id_b")
+            .select("id_a", "id_b", char_shingles(F.col(text_col)).alias("sh_b"))
+            .join(sa, "id_a")
+        )
+    return pairs.select(
+        "id_a", "id_b", _jaccard("sh_a", "sh_b").alias("jaccard")
+    ).filter(F.col("jaccard") >= jaccard_threshold)
+
+
 def write_minhash_band_index(
     docs: DataFrame,
     path: str,
@@ -415,12 +460,13 @@ def probe_minhash_band_index(
     its bands against the persisted index, then verify candidates with
     exact shingle Jaccard. ``index_df`` overrides the ``index_path`` read
     when the caller needs a filtered view of the index (e.g. a replayed
-    streaming batch excluding its own prior partition). The corpus table is scanned once to FETCH the
-    candidate rows (a semi-join on candidate corpus ids before any
-    shingling), so exact-verify compute — shingle arrays, intersections —
-    is O(candidates), never O(corpus); only the id-column scan of the
-    corpus remains linear, and that is the cheap columnar read a lookup
-    must pay on plain parquet (a keyed table format would prune it too).
+    streaming batch excluding its own prior partition). The corpus table
+    is scanned once to FETCH the candidate rows (streamed past the
+    broadcast candidate pairs before any shingling; see
+    _verified_band_pairs), so exact-verify compute — shingle arrays,
+    intersections — is O(candidates), never O(corpus); only the scan of
+    the corpus remains linear, and that is the read a lookup must pay on
+    plain parquet (a keyed table format would prune it too).
 
     Pass ``persist_handles`` (a list) from long-running callers — e.g. a
     foreachBatch handler invoking this per micro-batch — to receive the
@@ -432,43 +478,19 @@ def probe_minhash_band_index(
     Returns (new_id, corpus_id, jaccard) for every batch doc that
     near-duplicates an existing corpus doc at >= jaccard_threshold."""
     new_sh = _shingled_docs(new_docs, id_col, text_col).persist()
-    new_banded = _banded_from_shingled(new_sh, n_hashes, band_size, id_col)
-    index = index_df if index_df is not None else spark.read.parquet(index_path)
-    candidates = (
-        new_banded.select(F.col(id_col).alias("new_id"), "band", "band_sig")
-        .join(
-            index.select(F.col(id_col).alias("corpus_id"), "band", "band_sig"),
-            ["band", "band_sig"],
-        )
-        .select("new_id", "corpus_id")
-        .distinct()
-        .persist()
-    )
     if persist_handles is not None:
-        persist_handles.extend([new_sh, candidates])
-    cand_corpus = corpus_docs.join(
-        candidates.select(F.col("corpus_id").alias(id_col)).distinct(),
+        persist_handles.append(new_sh)
+    index = index_df if index_df is not None else spark.read.parquet(index_path)
+    pairs = _verified_band_pairs(
+        _banded_from_shingled(new_sh, n_hashes, band_size, id_col),
+        new_sh,
+        jaccard_threshold,
         id_col,
-        "semi",
+        probe=(index, corpus_docs),
+        text_col=text_col,
     )
-    corpus_sh = _shingled_docs(cand_corpus, id_col, text_col)
-    na = new_sh.select(F.col(id_col).alias("new_id"), F.col("sh").alias("sh_new"))
-    ca = corpus_sh.select(
-        F.col(id_col).alias("corpus_id"), F.col("sh").alias("sh_corpus")
-    )
-    return (
-        candidates.join(na, "new_id")
-        .join(ca, "corpus_id")
-        .select(
-            "new_id",
-            "corpus_id",
-            F.round(
-                F.size(F.array_intersect("sh_new", "sh_corpus")).cast("double")
-                / F.size(F.array_union("sh_new", "sh_corpus")),
-                6,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
+    return pairs.select(
+        F.col("id_a").alias("new_id"), F.col("id_b").alias("corpus_id"), "jaccard"
     )
 
 
@@ -479,7 +501,6 @@ def minhash_lsh_pairs_portable(
     jaccard_threshold: float = 0.3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    persist_handles: list | None = None,
 ) -> DataFrame:
     """The LSH pipeline with every stage engine-portable, so the WHOLE
     candidate-generation + verify path is oracle-checked (not just the
@@ -489,14 +510,8 @@ def minhash_lsh_pairs_portable(
     minhash_lsh_pairs (banded equi-join, shingles persisted across the
     signature and verify stages); the xxhash64 variant stays the
     production/bench path because it skips the md5 hex round-trip and
-    compares longs instead of strings.
-
-    ``persist_handles``: see probe_minhash_band_index — long-running
-    callers pass a list to receive the persisted shingle DataFrame for
-    explicit release after materializing the result."""
+    compares longs instead of strings."""
     docs_sh = _shingled_docs(docs, id_col, text_col).persist()
-    if persist_handles is not None:
-        persist_handles.append(docs_sh)
     # Optimization r14 (guide §1.2 step 1: don't compute twice): the band
     # relation feeds BOTH sides of the candidate self-join; unpersisted,
     # the md5 base-hash + signature chain — the most expensive per-row
@@ -504,41 +519,14 @@ def minhash_lsh_pairs_portable(
     # sibling (minhash_lsh_pairs) has persisted its banded relation for
     # the same reason since it was measured 2x there.
     banded = _banded_from_shingled(docs_sh, n_hashes, band_size, id_col).persist()
-    if persist_handles is not None:
-        persist_handles.append(banded)
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "band_sig")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "band_sig")
-    candidates = (
-        a.join(b, ["band", "band_sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    da = docs_sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    db = docs_sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    out = (
-        candidates.join(da, "id_a")
-        .join(db, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-    )
-    if persist_handles is not None:
-        # long-running callers release both handles themselves
-        return out
-    # Optimization r15 (ADVICE r14, dedup.py:503): one-shot callers used
-    # to leak one cache entry per persist per call for the session
-    # lifetime; materialize the (small) pair result eagerly and release
-    # both persists — the discipline prefix_filter/winnow already use.
+    # Optimization r15 (ADVICE r14, dedup.py:503): materialize the (small)
+    # pair result eagerly and release both persists, so repeated calls do
+    # not leak a cache entry per persist for the session lifetime — the
+    # discipline prefix_filter/winnow already use.
     try:
-        return out.localCheckpoint(eager=True)  # materialize before unpersist
+        return _verified_band_pairs(
+            banded, docs_sh, jaccard_threshold, id_col
+        ).localCheckpoint(eager=True)
     finally:
         banded.unpersist()
         docs_sh.unpersist()

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from parquet_exporter_spark.operators.pq import _fmt_double
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential double-precision dot product of two float arrays."""
@@ -118,7 +120,8 @@ def lsh_bucket(vec: str, planes: list[list[float]]) -> Column:
     """Sign-pattern bucket id from random-hyperplane projections: bit i set
     iff dot(vec, plane_i) >= 0. Cosine-similar vectors collide with high
     probability; bucket count = 2^n_planes. ``vec`` is the column NAME
-    (or any SQL expression) of the float-array column.
+    (or any SQL expression) of the float-array column; a ``Column`` raises
+    TypeError, since it would be spliced into the SQL text as its repr.
 
     Optimization r15 (guide §1.2 step 2; the operators/pq.py recipe):
     built as ONE ``F.expr`` string per table instead of ~300 py4j Column
@@ -129,8 +132,14 @@ def lsh_bucket(vec: str, planes: list[list[float]]) -> Column:
     are unchanged. Construction measured 1.7-2.0 s -> ~0.1 s for the
     8-table lsh_topk plan."""
 
+    if not isinstance(vec, str):
+        raise TypeError(
+            "lsh_bucket: vec must be the column name (str) of the float-array "
+            f"column, e.g. 'embedding', not {type(vec).__name__}"
+        )
+
     def _dot_sql(plane: list[float]) -> str:
-        arr = "array(" + ", ".join(repr(float(x)) + "D" for x in plane) + ")"
+        arr = "array(" + ", ".join(_fmt_double(x) for x in plane) + ")"
         return (
             f"aggregate(zip_with({vec}, {arr}, (x, y) -> "
             f"(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))), 0.0D, "

@@ -20,6 +20,8 @@ K-means/MinHash fits.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -28,8 +30,15 @@ def _fmt_double(v: float) -> str:
     """SQL double literal that parses back to the identical IEEE double:
     Python ``repr`` emits the shortest round-tripping decimal and Java's
     ``Double.parseDouble`` is correctly rounded, so the value survives the
-    string trip bit-for-bit. The D suffix pins the SQL type to DOUBLE."""
-    return repr(float(v)) + "D"
+    string trip bit-for-bit. The D suffix pins the SQL type to DOUBLE.
+    NaN and the infinities have no numeric literal (``nanD`` does not
+    parse), so they are spelled as casts of Spark's special strings."""
+    v = float(v)
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return "CAST('Infinity' AS DOUBLE)" if v > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return repr(v) + "D"
 
 
 def _dists(sub_name: str, cents: list[list[float]]):

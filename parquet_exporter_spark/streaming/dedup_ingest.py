@@ -2,13 +2,22 @@
 
 The steady-state shape of a 100 TB training-corpus pipeline: documents
 arrive as a stream; each micro-batch is (a) probed against the PERSISTED
-LSH band index of everything accepted so far (functions/dedup.py:
-probe_minhash_band_index — signs only the batch, equi-joins the index,
-exact-verifies candidates), (b) greedily deduplicated within itself, and
-(c) written — accepted docs to the corpus store, their band signatures
-to the index — so the NEXT batch dedups against this one without any
-corpus re-pairing. Per-batch cost is O(batch + candidates), never
-O(corpus).
+LSH band index of everything accepted so far (its bands equi-join the
+index; candidates are exact-verified against corpus text fetched for
+them only), (b) greedily deduplicated within itself, and (c) written —
+accepted docs to the corpus store, their band signatures to the index —
+so the NEXT batch dedups against this one without any corpus re-pairing.
+Per-batch cost is O(batch + candidates), never O(corpus).
+
+One signing pass, one materialization: the batch is shingled and
+md5-signed ONCE, into persisted shingle and band relations that read the
+batch alone. The index probe, the within-batch self-join and the index
+write all reuse those bands (functions/dedup.py: _verified_band_pairs is
+the shared candidate-join + exact-Jaccard core). The verdict is one
+relation tagging every batch row ``is_dup``, materialized by ONE
+localCheckpoint; accepted and rejected are two filters over it. With AQE
+off, a steady-state micro-batch fires 10 Spark jobs: two store schema
+reads, four broadcasts, the checkpoint, and the three writes.
 
 foreachBatch is the right host: index probe + multi-sink writes are one
 transaction per micro-batch, which no single file sink expresses.
@@ -38,10 +47,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parquet_exporter_spark.functions.dedup import (
-    minhash_lsh_pairs_portable,
-    probe_minhash_band_index,
     _banded_from_shingled,
     _shingled_docs,
+    _verified_band_pairs,
 )
 
 
@@ -136,6 +144,78 @@ def _max_ingest_batch(spark, path: str) -> int | None:
         return int(row.m) if row.m is not None else None
 
 
+def _tagged_batch(
+    batch_df: DataFrame,
+    index_path: str,
+    corpus_path: str,
+    n_hashes: int,
+    band_size: int,
+    jaccard_threshold: float,
+    id_col: str,
+    text_col: str,
+    persist_handles: list | None,
+    exclude_ingest_batch: int | None,
+) -> tuple[DataFrame, DataFrame]:
+    """(verdict, banded) for one batch: every batch row with a boolean
+    ``is_dup`` column, and the batch's (id, band, band_sig) rows. The batch
+    is shingled and signed ONCE, into persisted ``sh`` and ``banded``
+    relations that read the batch only; the index probe and the
+    within-batch self-join over survivors both read ``banded``, and both
+    verify steps read ``sh``. See dedup_batch_against_index for the
+    arguments."""
+    spark = batch_df.sparkSession
+
+    def _without_own_batch(df: DataFrame | None) -> DataFrame | None:
+        if (
+            df is not None
+            and exclude_ingest_batch is not None
+            and "ingest_batch" in df.columns
+        ):
+            return df.filter(F.col("ingest_batch") != exclude_ingest_batch)
+        return df
+
+    corpus = _without_own_batch(_readable_parquet(spark, corpus_path))
+    index_df = _without_own_batch(_readable_parquet(spark, index_path))
+    sh = _shingled_docs(batch_df, id_col, text_col).persist()
+    banded = _banded_from_shingled(sh, n_hashes, band_size, id_col).persist()
+    if persist_handles is not None:
+        persist_handles.extend([sh, banded])
+    dup_ids = None
+    survivors = banded
+    if corpus is not None and index_df is not None:
+        cross = _verified_band_pairs(
+            banded,
+            sh,
+            jaccard_threshold,
+            id_col,
+            probe=(index_df, corpus),
+            text_col=text_col,
+        )
+        dup_ids = cross.select(F.col("id_a").alias(id_col))
+        survivors = banded.join(dup_ids, id_col, "left_anti")
+    # greedy keep-smallest-id: in every colliding survivor pair the larger
+    # id loses, so each near-dup family's minimum id survives
+    losers = _verified_band_pairs(survivors, sh, jaccard_threshold, id_col).select(
+        F.col("id_b").alias(id_col)
+    )
+    dups = losers if dup_ids is None else dup_ids.unionByName(losers)
+    verdict = batch_df.join(
+        dups.distinct().withColumn("is_dup", F.lit(True)), id_col, "left"
+    ).select(
+        *[F.col(c) for c in batch_df.columns],
+        F.coalesce(F.col("is_dup"), F.lit(False)).alias("is_dup"),
+    )
+    return verdict, banded
+
+
+def _split(verdict: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(accepted, rejected) batch rows of a tagged batch."""
+    return (
+        verdict.filter(~F.col("is_dup")).drop("is_dup"),
+        verdict.filter(F.col("is_dup")).drop("is_dup"),
+    )
+
+
 def dedup_batch_against_index(
     batch_df: DataFrame,
     index_path: str,
@@ -168,51 +248,29 @@ def dedup_batch_against_index(
     the state the original run saw. The filter is on the partition
     column, so the excluded partition's files are pruned, never read.
     """
-    spark = batch_df.sparkSession
-
-    def _without_own_batch(df: DataFrame | None) -> DataFrame | None:
-        if (
-            df is not None
-            and exclude_ingest_batch is not None
-            and "ingest_batch" in df.columns
-        ):
-            return df.filter(F.col("ingest_batch") != exclude_ingest_batch)
-        return df
-
-    corpus = _without_own_batch(_readable_parquet(spark, corpus_path))
-    index_df = _without_own_batch(_readable_parquet(spark, index_path))
-    if corpus is not None and index_df is not None:
-        cross_hits = probe_minhash_band_index(
-            spark,
-            index_path,
-            batch_df,
-            corpus,
-            n_hashes=n_hashes,
-            band_size=band_size,
-            jaccard_threshold=jaccard_threshold,
-            id_col=id_col,
-            text_col=text_col,
-            persist_handles=persist_handles,
-            index_df=index_df,
-        )
-        dup_ids = cross_hits.select(F.col("new_id").alias(id_col)).distinct()
-        survivors = batch_df.join(dup_ids, id_col, "left_anti")
-    else:
-        survivors = batch_df
-    intra = minhash_lsh_pairs_portable(
-        survivors,
-        n_hashes=n_hashes,
-        band_size=band_size,
-        jaccard_threshold=jaccard_threshold,
-        id_col=id_col,
-        text_col=text_col,
-        persist_handles=persist_handles,
+    verdict, _ = _tagged_batch(
+        batch_df,
+        index_path,
+        corpus_path,
+        n_hashes,
+        band_size,
+        jaccard_threshold,
+        id_col,
+        text_col,
+        persist_handles,
+        exclude_ingest_batch,
     )
-    losers = intra.select(F.col("id_b").alias(id_col)).distinct()
-    accepted = survivors.join(losers, id_col, "left_anti")
-    rejected_ids = batch_df.select(id_col).exceptAll(accepted.select(id_col))
-    rejected = batch_df.join(rejected_ids.distinct(), id_col, "semi")
-    return accepted, rejected
+    return _split(verdict)
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a localCheckpoint-ed DataFrame now, instead of
+    whenever the driver garbage-collects it. Under Spark Connect (no py4j
+    handle) the server releases them with the DataFrame."""
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except AttributeError:
+        pass
 
 
 def make_ingest_batch_handler(
@@ -249,7 +307,15 @@ def make_ingest_batch_handler(
     O(store-files) listing off the steady-state per-batch path. (The one
     undetectable corner — the prior lineage committed only batch 0 and
     the new lineage's batch 0 overwrites it — is why the path binding is
-    a documented contract, not merely a runtime check.)"""
+    a documented contract, not merely a runtime check.)
+
+    PER-BATCH COST: the batch is signed once (_tagged_batch) and its
+    verdict checkpointed once; the corpus, rejects and index writes read
+    that checkpoint, and the index rows are the persisted bands of the
+    accepted ids. Every persist and the checkpoint's blocks are released
+    before the handler returns, so cached blocks do not accrue across
+    batches. With AQE off a steady-state call fires 10 jobs; with AQE on
+    each shuffle stage adds one."""
     last_batch: list[int | None] = [None]
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
@@ -272,42 +338,38 @@ def make_ingest_batch_handler(
         )
         batch_df = batch_df.persist()
         handles: list = [batch_df]
+        verdict = None
         try:
-            accepted, rejected = dedup_batch_against_index(
+            tagged, banded = _tagged_batch(
                 batch_df,
                 index_path,
                 corpus_path,
-                n_hashes=n_hashes,
-                band_size=band_size,
-                jaccard_threshold=jaccard_threshold,
-                id_col=id_col,
-                text_col=text_col,
-                persist_handles=handles,
-                exclude_ingest_batch=batch_id,
+                n_hashes,
+                band_size,
+                jaccard_threshold,
+                id_col,
+                text_col,
+                handles,
+                batch_id,
             )
-            # Materialize BOTH verdicts before any write, with lineage
-            # TRUNCATED (localCheckpoint, not persist): their plans read
-            # the corpus/index parquet this batch is about to write to,
-            # and writing under a path invalidates+recomputes any cache
-            # whose plan scans it (CacheManager recache-by-path) — a
-            # recomputed verdict would see the batch's own rows and
-            # self-reject them. Checkpointed blocks have no lineage to
-            # recompute, so they are immune.
-            accepted = accepted.localCheckpoint(eager=True)
-            rejected = rejected.localCheckpoint(eager=True)
+            # Materialize the verdict ONCE before any write, with lineage
+            # TRUNCATED (localCheckpoint, not persist): its plan reads the
+            # corpus/index parquet this batch is about to write to, and
+            # writing under a path invalidates+recomputes any cache whose
+            # plan scans it (CacheManager recache-by-path) — a recomputed
+            # verdict would see the batch's own rows and self-reject them.
+            # Checkpointed blocks have no lineage to recompute, so they are
+            # immune. ``banded`` reads the batch only, so the index write
+            # below reuses it safely.
+            verdict = tagged.localCheckpoint(eager=True)
+            accepted, rejected = _split(verdict)
             batch_dir = f"ingest_batch={batch_id}"
             accepted.write.mode("overwrite").parquet(
                 f"{corpus_path}/{batch_dir}"
             )
-            banded = _banded_from_shingled(
-                _shingled_docs(accepted, id_col, text_col),
-                n_hashes,
-                band_size,
-                id_col,
-            )
-            banded.write.mode("overwrite").partitionBy("band").parquet(
-                f"{index_path}/{batch_dir}"
-            )
+            banded.join(accepted.select(id_col), id_col, "semi").write.mode(
+                "overwrite"
+            ).partitionBy("band").parquet(f"{index_path}/{batch_dir}")
             if rejects_path is not None:
                 rejected.write.mode("overwrite").parquet(
                     f"{rejects_path}/{batch_dir}"
@@ -315,6 +377,8 @@ def make_ingest_batch_handler(
         finally:
             for h in handles:
                 h.unpersist()
+            if verdict is not None:
+                _release_checkpoint(verdict)
 
     return _ingest
 

@@ -145,45 +145,44 @@ def read_partials(spark, store_dir: str) -> DataFrame | None:
     """All live partial rows tagged with batch_id: the newest compacted
     fold (tagged with its bound B) plus every committed batch partial
     above it. None before the first commit. Orphans without markers are
-    never read."""
+    never read.
+
+    One ``spark.read.parquet`` over every live file, with batch_id parsed
+    from each row's file name (``cent-<B>-`` / ``compact-<B>-``): a read
+    per batch would fire one schema-inference job per committed batch,
+    so serving cost would grow with the store. A fold has the same schema
+    as the batch partials it replaces (each merge writes the partial's
+    columns and types), so one footer's schema serves all files."""
     upto = compacted_upto(store_dir)
-    parts = []
+    files = []
     if upto is not None:
-        files = sorted(
+        fold = sorted(
             glob.glob(os.path.join(store_dir, f"compact-{upto:08d}-*.parquet"))
         )
-        if not files:
+        if not fold:
             raise FileNotFoundError(
                 f"partial store {store_dir}: compact marker {upto} exists "
                 "but its fold file is missing"
             )
-        parts.append(
-            spark.read.parquet(*files).withColumn(
-                "batch_id", F.lit(upto).cast("long")
-            )
-        )
+        files += fold
     for b in committed_batches(store_dir):
         if upto is not None and b <= upto:
             continue
-        files = sorted(
+        part = sorted(
             glob.glob(os.path.join(store_dir, f"cent-{b:08d}-*.parquet"))
         )
-        if not files:
+        if not part:
             raise FileNotFoundError(
                 f"partial store {store_dir}: marker for batch {b} exists "
                 "but its partial file is missing"
             )
-        parts.append(
-            spark.read.parquet(*files).withColumn(
-                "batch_id", F.lit(b).cast("long")
-            )
-        )
-    if not parts:
+        files += part
+    if not files:
         return None
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
+    batch_id = F.regexp_extract(
+        F.col("_metadata.file_name"), r"^(?:cent|compact)-(\d+)-", 1
+    ).cast("long")
+    return spark.read.parquet(*files).withColumn("batch_id", batch_id)
 
 
 def commit_compaction(

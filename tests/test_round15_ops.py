@@ -137,3 +137,41 @@ def test_pq_expr_literals_round_trip_exactly(spark):
     assert list(row["d"]) == list(row["r"])
     # distance to the first centroid (identical values) must be exactly 0
     assert row["d"][0] == 0.0
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_fmt_double_spells_non_finite_values(spark, bad):
+    """NaN and the infinities have no numeric SQL literal; the shared
+    formatter must emit a form Spark parses back to the same value."""
+    from parquet_exporter_spark.operators.pq import _fmt_double
+
+    got = spark.range(1).select(F.expr(_fmt_double(bad)).alias("v")).first().v
+    assert got != got if bad != bad else got == bad
+
+
+def test_pq_model_builds_with_nan_in_init_centroids(spark):
+    """pq_model's init centroids are the first n_centroids raw vectors, so
+    a NaN there lands in the codebook literal tree: plan build and
+    encoding must still run."""
+    from parquet_exporter_spark.operators.pq import pq_model
+
+    rows = [
+        (i, [float("nan") if (i, j) == (0, 1) else float((i * 7 + j) % 11) for j in range(8)])
+        for i in range(12)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    encoded, books = pq_model(emb, n_subspaces=2, n_centroids=4, n_iters=2)
+    got = encoded.collect()
+    assert len(got) == 12
+    assert any(v != v for v in books[0][0])
+
+
+def test_lsh_bucket_rejects_column_argument():
+    """lsh_bucket splices ``vec`` into SQL text: a Column must fail with a
+    clear TypeError, not as an AnalysisException on its repr."""
+    from parquet_exporter_spark.functions.similarity import lsh_bucket, random_hyperplanes
+
+    planes = random_hyperplanes(4, 2)
+    with pytest.raises(TypeError, match="column name"):
+        lsh_bucket(F.col("embedding"), planes)
+    assert lsh_bucket("embedding", planes) is not None

@@ -373,48 +373,65 @@ def _jaccard(a: str, b: str) -> Column:
     )
 
 
-def _verified_band_pairs(
-    banded: DataFrame,
+def _band_candidates(
+    banded_a: DataFrame, banded_b: DataFrame, id_col: str
+) -> DataFrame:
+    """(id_a, id_b) for every (band, band_sig) collision between two
+    (id, band, band_sig) relations, one row per colliding band (callers
+    filter and distinct)."""
+    a = banded_a.select(F.col(id_col).alias("id_a"), "band", "band_sig")
+    b = banded_b.select(F.col(id_col).alias("id_b"), "band", "band_sig")
+    return a.join(b, ["band", "band_sig"]).select("id_a", "id_b")
+
+
+def _verified_self_pairs(
+    banded: DataFrame, sh: DataFrame, jaccard_threshold: float, id_col: str
+) -> DataFrame:
+    """LSH self-join over already-signed docs: (id_a, id_b, jaccard) for
+    each colliding pair once (id_a < id_b) with exact shingle Jaccard >=
+    threshold. ``banded`` is (id, band, band_sig), ``sh`` is (id, sh)."""
+    candidates = (
+        _band_candidates(banded, banded, id_col)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .distinct()
+    )
+    sa = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
+    sb = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    return (
+        candidates.join(sa, "id_a")
+        .join(sb, "id_b")
+        .select("id_a", "id_b", _jaccard("sh_a", "sh_b").alias("jaccard"))
+        .filter(F.col("jaccard") >= jaccard_threshold)
+    )
+
+
+def _verified_probe_pairs(
+    candidates: DataFrame,
     sh: DataFrame,
+    corpus: DataFrame,
     jaccard_threshold: float,
     id_col: str,
-    probe: tuple[DataFrame, DataFrame] | None = None,
-    text_col: str = "text",
+    text_col: str,
 ) -> DataFrame:
-    """The LSH core over already-signed docs: candidate pairs from the
-    (band, band_sig) equi-join, kept where exact shingle Jaccard >=
-    threshold. Returns (id_a, id_b, jaccard).
-
-    ``banded`` is (id, band, band_sig) and ``sh`` is (id, sh) for the same
-    docs. With ``probe`` None it is the self-join, each colliding pair once
-    with id_a < id_b. With ``probe = (index, corpus)`` the docs are probed
-    against a persisted band index instead: b is the index's (id, band,
-    band_sig) rows, and the corpus is streamed past the broadcast candidate
-    pairs to fetch each candidate's (id, ``text_col``) row, which is
-    shingled only after that join — verify compute is O(candidates), and
-    the corpus is never shuffled or shingled whole. The broadcast holds
-    id pairs of one batch's band collisions, not corpus rows."""
-    banded_b, corpus = (banded, None) if probe is None else probe
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "band_sig")
-    b = banded_b.select(F.col(id_col).alias("id_b"), "band", "band_sig")
-    candidates = a.join(b, ["band", "band_sig"])
-    if probe is None:
-        candidates = candidates.filter(F.col("id_a") < F.col("id_b"))
-    candidates = candidates.select("id_a", "id_b").distinct()
+    """Exact verify of (id_a = new doc, id_b = corpus doc) candidates.
+    ``sh`` is the new docs' (id, sh). The corpus rows of the distinct
+    candidate ids are fetched by a semi-join and shingled once each, so
+    verify compute is O(candidates), never O(corpus). ``candidates`` is
+    read twice (the fetch and the pairs): pass it persisted. Returns
+    (id_a, id_b, jaccard) at >= threshold."""
+    fetched = corpus.join(
+        candidates.select(F.col("id_b").alias(id_col)).distinct(), id_col, "semi"
+    )
     sa = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    if probe is None:
-        sb = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-        pairs = candidates.join(sa, "id_a").join(sb, "id_b")
-    else:
-        fetched = corpus.select(F.col(id_col).alias("id_b"), F.col(text_col))
-        pairs = (
-            fetched.join(F.broadcast(candidates), "id_b")
-            .select("id_a", "id_b", char_shingles(F.col(text_col)).alias("sh_b"))
-            .join(sa, "id_a")
-        )
-    return pairs.select(
-        "id_a", "id_b", _jaccard("sh_a", "sh_b").alias("jaccard")
-    ).filter(F.col("jaccard") >= jaccard_threshold)
+    sb = _shingled_docs(fetched, id_col, text_col).select(
+        F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")
+    )
+    return (
+        candidates.join(sa, "id_a")
+        .join(sb, "id_b")
+        .select("id_a", "id_b", _jaccard("sh_a", "sh_b").alias("jaccard"))
+        .filter(F.col("jaccard") >= jaccard_threshold)
+    )
 
 
 def write_minhash_band_index(
@@ -453,7 +470,6 @@ def probe_minhash_band_index(
     jaccard_threshold: float = 0.3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    persist_handles: list | None = None,
     index_df: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental near-dup check: sign ONLY the new batch, candidate-join
@@ -461,33 +477,24 @@ def probe_minhash_band_index(
     exact shingle Jaccard. ``index_df`` overrides the ``index_path`` read
     when the caller needs a filtered view of the index (e.g. a replayed
     streaming batch excluding its own prior partition). The corpus table
-    is scanned once to FETCH the candidate rows (streamed past the
-    broadcast candidate pairs before any shingling; see
-    _verified_band_pairs), so exact-verify compute — shingle arrays,
-    intersections — is O(candidates), never O(corpus); only the scan of
-    the corpus remains linear, and that is the read a lookup must pay on
-    plain parquet (a keyed table format would prune it too).
-
-    Pass ``persist_handles`` (a list) from long-running callers — e.g. a
-    foreachBatch handler invoking this per micro-batch — to receive the
-    internally persisted DataFrames for explicit ``unpersist()`` once the
-    result is materialized; without it the cache entries live until the
-    session ends, which is fine for one-shot queries but unbounded for a
-    streaming ingest.
+    is scanned once to FETCH the candidate rows (a semi-join on candidate
+    corpus ids before any shingling; see _verified_probe_pairs), so
+    exact-verify compute — shingle arrays, intersections — is
+    O(candidates), never O(corpus); only the scan of the corpus remains
+    linear, and that is the read a lookup must pay on plain parquet (a
+    keyed table format would prune it too). The planner picks every join
+    strategy: the candidate set grows with the batch and with the band
+    collision rate, so nothing here is hinted to broadcast.
 
     Returns (new_id, corpus_id, jaccard) for every batch doc that
     near-duplicates an existing corpus doc at >= jaccard_threshold."""
     new_sh = _shingled_docs(new_docs, id_col, text_col).persist()
-    if persist_handles is not None:
-        persist_handles.append(new_sh)
     index = index_df if index_df is not None else spark.read.parquet(index_path)
-    pairs = _verified_band_pairs(
-        _banded_from_shingled(new_sh, n_hashes, band_size, id_col),
-        new_sh,
-        jaccard_threshold,
-        id_col,
-        probe=(index, corpus_docs),
-        text_col=text_col,
+    candidates = _band_candidates(
+        _banded_from_shingled(new_sh, n_hashes, band_size, id_col), index, id_col
+    ).distinct().persist()
+    pairs = _verified_probe_pairs(
+        candidates, new_sh, corpus_docs, jaccard_threshold, id_col, text_col
     )
     return pairs.select(
         F.col("id_a").alias("new_id"), F.col("id_b").alias("corpus_id"), "jaccard"
@@ -524,7 +531,7 @@ def minhash_lsh_pairs_portable(
     # not leak a cache entry per persist for the session lifetime — the
     # discipline prefix_filter/winnow already use.
     try:
-        return _verified_band_pairs(
+        return _verified_self_pairs(
             banded, docs_sh, jaccard_threshold, id_col
         ).localCheckpoint(eager=True)
     finally:

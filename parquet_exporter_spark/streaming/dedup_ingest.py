@@ -12,8 +12,9 @@ Per-batch cost is O(batch + candidates), never O(corpus).
 One signing pass, one materialization: the batch is shingled and
 md5-signed ONCE, into persisted shingle and band relations that read the
 batch alone. The index probe, the within-batch self-join and the index
-write all reuse those bands (functions/dedup.py: _verified_band_pairs is
-the shared candidate-join + exact-Jaccard core). The verdict is one
+write all reuse those bands (functions/dedup.py: _band_candidates is the
+shared band equi-join, _verified_probe_pairs and _verified_self_pairs the
+two exact-Jaccard verifies). The verdict is one
 relation tagging every batch row ``is_dup``, materialized by ONE
 localCheckpoint; accepted and rejected are two filters over it. With AQE
 off, a steady-state micro-batch fires 10 Spark jobs: two store schema
@@ -47,9 +48,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parquet_exporter_spark.functions.dedup import (
+    _band_candidates,
     _banded_from_shingled,
     _shingled_docs,
-    _verified_band_pairs,
+    _verified_probe_pairs,
+    _verified_self_pairs,
 )
 
 
@@ -183,19 +186,17 @@ def _tagged_batch(
     dup_ids = None
     survivors = banded
     if corpus is not None and index_df is not None:
-        cross = _verified_band_pairs(
-            banded,
-            sh,
-            jaccard_threshold,
-            id_col,
-            probe=(index_df, corpus),
-            text_col=text_col,
+        candidates = _band_candidates(banded, index_df, id_col).distinct().persist()
+        if persist_handles is not None:
+            persist_handles.append(candidates)
+        cross = _verified_probe_pairs(
+            candidates, sh, corpus, jaccard_threshold, id_col, text_col
         )
         dup_ids = cross.select(F.col("id_a").alias(id_col))
         survivors = banded.join(dup_ids, id_col, "left_anti")
     # greedy keep-smallest-id: in every colliding survivor pair the larger
     # id loses, so each near-dup family's minimum id survives
-    losers = _verified_band_pairs(survivors, sh, jaccard_threshold, id_col).select(
+    losers = _verified_self_pairs(survivors, sh, jaccard_threshold, id_col).select(
         F.col("id_b").alias(id_col)
     )
     dups = losers if dup_ids is None else dup_ids.unionByName(losers)

@@ -114,17 +114,18 @@ def release_corpus(
         F.approx_count_distinct("source").alias("approx_sources"),
     )
     data_path = os.path.join(out_dir, "data")
+    release = observed.withColumnRenamed("__n_tok", "n_tokens")
     (
-        observed.withColumnRenamed("__n_tok", "n_tokens")
-        .write.mode("overwrite")
+        release.write.mode("overwrite")
         .partitionBy("source")
         .option("compression", "zstd")
         .parquet(data_path)
     )
 
     # dataset card: bounded per-source summary off the written snapshot
-    # (read-back doubles as write verification)
-    released = spark.read.parquet(data_path)
+    # (read-back doubles as write verification); the schema is the one just
+    # written, which an empty release leaves no file to infer from
+    released = spark.read.schema(release.schema).parquet(data_path)
     per_source = [
         r.asDict()
         for r in released.groupBy("source")
@@ -137,7 +138,8 @@ def release_corpus(
     ]
     card = {
         "budget_per_source": budget_per_source,
-        "metrics": {k: int(v) for k, v in obs.get.items()},
+        # sums over zero rows are NULL
+        "metrics": {k: int(v or 0) for k, v in obs.get.items()},
         "sources": per_source,
     }
     with open(os.path.join(out_dir, "dataset_card.json"), "w") as f:

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -68,17 +68,18 @@ def write_feature_collection_distributed(
     A consumer concatenates header + ','-joined feature lines + footer to
     obtain the exact single-document FeatureCollection; keeping the body
     as parts is what makes the sink linear-scalable — no single process
-    ever holds more than one feature. Returns the feature count.
+    ever holds more than one feature. Returns the feature count, observed
+    on the text write itself: the sink fires one job and never reads its
+    output back.
     """
     import os
 
-    feats = features_df(df, lat, lng)
-    body_dir = os.path.join(out_dir, "features")
-    feats.write.mode("overwrite").text(body_dir)
-    n = feats.sparkSession.read.text(body_dir).count()
+    obs = Observation("geojson_features")
+    feats = features_df(df, lat, lng).observe(obs, F.count(F.lit(1)).alias("features"))
+    feats.write.mode("overwrite").text(os.path.join(out_dir, "features"))
     os.makedirs(out_dir, exist_ok=True)
     with open(os.path.join(out_dir, "header.json"), "w") as f:
         f.write('{"type": "FeatureCollection", "features": [')
     with open(os.path.join(out_dir, "footer.json"), "w") as f:
         f.write("]}")
-    return n
+    return obs.get["features"]

@@ -68,3 +68,12 @@ def test_release_corpus_end_to_end(spark, sf_dir, tmp_path):
     # every released doc passes the quality gate it was cut with
     src_docs = read_table(spark, sf_dir, "documents").select("doc_id")
     assert released.join(src_docs, "doc_id", "left_anti").count() == 0
+
+
+def test_empty_release_returns_zero_counts(spark, sf_dir, tmp_path):
+    """A zero token budget keeps no document: the release still succeeds,
+    with an empty snapshot and zero counts on its card."""
+    out = str(tmp_path / "empty_release")
+    card = release_corpus(spark, sf_dir, out, budget_per_source=0)
+    assert card["metrics"] == {"examples": 0, "tokens": 0, "approx_sources": 0}
+    assert card["sources"] == []

@@ -260,7 +260,7 @@ def test_export_observe_metrics(spark, tmp_path):
     matches the read-back count, null-coordinate rows are counted."""
     docs = [
         _climb("m1", pathTokens=["USA", "S"]),
-        _climb("m2", pathTokens=["USA", "S"], lat=None, lng=None),
+        _climb("m2", pathTokens=["USA", "S"], metadata=None),
     ]
     df = ingest_climb_docs(spark, docs)
     out = str(tmp_path / "metrics_out")
@@ -268,7 +268,98 @@ def test_export_observe_metrics(spark, tmp_path):
     m = stats["metrics"]
     assert m["rows_observed"] == stats["total_rows"] == 2
     assert m["approx_countries"] == 1
-    assert m["null_coord_rows"] in (0, 1)  # parent-fill may supply coords
+    assert m["null_coord_rows"] == 1
+
+
+def test_export_stats_and_sample(spark, tmp_path, capsys):
+    """Export stats (R24) against the raw-JSON yardstick computed here in a
+    separate pass, and the sample display (R23)."""
+    from pyspark.sql import functions as F
+
+    from parquet_exporter_spark.operators.climbs_reshape import reshape
+    from parquet_exporter_spark.sinks.stats import dir_size_bytes
+
+    docs = [
+        _climb(f"s{i}", pathTokens=["USA", f"State {i % 3}"], length=i) for i in range(40)
+    ]
+    df = ingest_climb_docs(spark, docs)
+    out = str(tmp_path / "stats_out")
+    stats = run_export(spark, df, out, sample=True)
+
+    flat = reshape(df)
+    raw = (
+        flat.select(F.octet_length(F.to_json(F.struct(*flat.columns))).alias("b"))
+        .agg(F.sum("b"))
+        .first()[0]
+    )
+    assert stats["total_rows"] == 40
+    assert stats["raw_size_mb"] == round(raw / 1e6, 3)
+    assert stats["output_size_mb"] == round(dir_size_bytes(out) / 1e6, 3)
+    assert stats["compression_ratio"] == round(raw / dir_size_bytes(out), 3)
+    shown = capsys.readouterr().out
+    assert "climb_id" in shown and "only showing top 5 rows" in shown
+
+
+def test_empty_export_returns_zero_counts(spark, tmp_path):
+    """A region filter that keeps nothing is a successful, empty export."""
+    df = ingest_climb_docs(spark, [_climb("e1", pathTokens=["USA", "S"])])
+    out = str(tmp_path / "empty_out")
+    stats = run_export(spark, df, out, config={"export": {"regions": ["Nowhere"]}})
+    assert stats["total_rows"] == 0
+    assert stats["raw_size_mb"] == stats["compression_ratio"] == 0
+    assert set(stats["metrics"].values()) == {0}
+    assert spark.read.parquet(out).count() == 0
+
+
+def _run_in_job_group(sc, tag: str, fn):
+    """Run ``fn`` under job group ``tag``; return its result, its job count
+    and the input bytes summed over the stages those jobs ran."""
+    sc.setJobGroup(tag, tag)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    jobs = sc.statusTracker().getJobIdsForGroup(tag)
+    stages = set()
+    for job in jobs:
+        ids = store.job(job).stageIds()
+        stages.update(ids.apply(i) for i in range(ids.size()))
+    return result, len(jobs), sum(store.lastStageAttempt(s).inputBytes() for s in stages)
+
+
+def test_export_scans_its_input_once(spark, tmp_path):
+    """The stats and metrics ride the parquet write: the JSON input is read
+    once, plus the footers of the read-back count."""
+    from parquet_exporter_spark.sources.climbs import read_climbs_json
+
+    corpus = tmp_path / "climbs.jsonl"
+    docs = [_climb(f"j{i}", pathTokens=["USA", f"S{i % 7}"]) for i in range(2000)]
+    corpus.write_text("".join(json.dumps(d) + "\n" for d in docs))
+    out = str(tmp_path / "scan_out")
+    _, _, input_bytes = _run_in_job_group(
+        spark.sparkContext,
+        "export-scans-input-once",
+        lambda: run_export(spark, read_climbs_json(spark, str(corpus)), out),
+    )
+    assert 0 < input_bytes <= 1.2 * os.path.getsize(corpus)
+
+
+def test_geojson_distributed_sink_fires_one_job(spark, tmp_path):
+    """The feature count is observed on the text write; nothing is re-read."""
+    from parquet_exporter_spark.operators.climbs_reshape import reshape
+    from parquet_exporter_spark.sinks.geojson import write_feature_collection_distributed
+
+    flat = reshape(ingest_climb_docs(spark, [_climb("g1"), _climb("g2", metadata=None)]))
+    n, jobs, _ = _run_in_job_group(
+        spark.sparkContext,
+        "geojson-sink-one-job",
+        lambda: write_feature_collection_distributed(flat, str(tmp_path / "geo")),
+    )
+    assert n == 1
+    assert jobs == 1
 
 
 def test_json_scan_corrupt_record_handling(spark, tmp_path):

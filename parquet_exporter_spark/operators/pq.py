@@ -86,6 +86,23 @@ def _code(d_col):
     return (F.array_position(d_col, F.array_min(d_col)) - 1).cast("int")
 
 
+def nearest_centroid(
+    df: DataFrame, cents: list[list[float]], vec: str = "x"
+) -> DataFrame:
+    """Nearest-centroid assignment over literal centroids: ``df`` plus
+    ``cluster`` (int, the lowest centroid index at the minimum round-9
+    squared-L2 distance) and ``dist`` (that distance). The distance
+    array is bound in its own projection, as ``_code`` requires. A NULL
+    or short vector has NULL distances (zip_with pads with NULL), so it
+    gets cluster K-1 and a NULL dist."""
+    d = df.select("*", _dists(vec, cents).alias("_d"))
+    return d.select(
+        *df.columns,
+        F.coalesce(_code(F.col("_d")), F.lit(len(cents) - 1)).alias("cluster"),
+        F.array_min("_d").alias("dist"),
+    )
+
+
 def pq_encode(
     emb: DataFrame,
     n_subspaces: int = 8,

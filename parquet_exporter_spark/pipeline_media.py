@@ -147,8 +147,11 @@ def ingest_media(
         f"{output_dir}/quarantine"
     )
 
+    # read back with the written schemas: a partitioned write of zero
+    # rows leaves no file to infer one from
     card = (
-        spark.read.parquet(f"{output_dir}/kept")
+        spark.read.schema(final.schema)
+        .parquet(f"{output_dir}/kept")
         .groupBy("format_kind")
         .agg(
             F.count(F.lit(1)).alias("n_files"),
@@ -158,7 +161,8 @@ def ingest_media(
         .collect()
     )
     rejects = (
-        spark.read.parquet(f"{output_dir}/quarantine")
+        spark.read.schema(quarantined.schema)
+        .parquet(f"{output_dir}/quarantine")
         .groupBy("reject_reason")
         .count()
         .collect()

@@ -13,8 +13,51 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from parquet_exporter_spark.queries._util import rmoney, rratio
+from parquet_exporter_spark.queries._util import (
+    distinct_verdict,
+    hdr_merge_law,
+    hdr_verdict,
+    lineitem_cents,
+    rmoney,
+    rratio,
+    tdigest_verdict,
+    true_distinct,
+)
 from parquet_exporter_spark.registry import query
+from parquet_exporter_spark.streaming.cms_ingest import (
+    CMS_D,
+    CMS_W,
+    _bucket_rows,
+    cms_partial,
+)
+from parquet_exporter_spark.streaming.hdr_ingest import (
+    HDR_SUB,
+    hdr_partial,
+    serve_hdr_quantiles,
+)
+from parquet_exporter_spark.streaming.hll_ingest import (
+    HLL_HEX,
+    HLL_LC_CUT,
+    HLL_M,
+    HLL_NUM,
+    HLL_REM,
+    HLL_RMAX,
+    hll_partial,
+    merge_hll,
+    serve_hll_estimate,
+)
+from parquet_exporter_spark.streaming.kmv_ingest import (
+    KMV_HEX,
+    KMV_K,
+    KMV_SPACE,
+    kmv_partial,
+    serve_kmv_estimate,
+)
+from parquet_exporter_spark.streaming.tdigest_ingest import (
+    TD_SUB,
+    serve_tdigest_quantiles,
+    tdigest_partial,
+)
 from parquet_exporter_spark.tables import read_table, tiny_df
 
 
@@ -486,20 +529,16 @@ def agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CMS_W = 64  # portable sketch width (buckets per depth)
-_CMS_D = 4  # portable sketch depth (hash functions)
-
-
 def _cms_oracle() -> str:
     from parquet_exporter_spark.functions import dedup as _D
 
-    coeffs = _D.hash_coefficients(_CMS_D)
+    coeffs = _D.hash_coefficients(CMS_D)
     seeds = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(coeffs))
     bh = _D.sql_base_hash_31("CAST(o_custkey AS VARCHAR)")
     return f"""
     WITH h AS (SELECT o_custkey, {bh} AS h FROM orders),
     buck AS (
-        SELECT o_custkey, seed AS depth, ((a * h + b) % {_D.MERSENNE_31}) % {_CMS_W} AS bucket
+        SELECT o_custkey, seed AS depth, ((a * h + b) % {_D.MERSENNE_31}) % {CMS_W} AS bucket
         FROM h CROSS JOIN (VALUES {seeds}) AS t(seed, a, b)
     ),
     sketch AS (
@@ -543,31 +582,9 @@ def _cms_oracle() -> str:
     ),
 )
 def agg_count_min_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from parquet_exporter_spark.functions import dedup as _D
-
     orders = read_table(spark, sf_dir, "orders")
-    coeffs = _D.hash_coefficients(_CMS_D)
-    h = orders.select("o_custkey", _D.base_hash_31(F.col("o_custkey").cast("string")).alias("h"))
-    buck = h.select(
-        "o_custkey",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("depth"),
-                        (
-                            (F.lit(a) * F.col("h") + F.lit(b))
-                            % _D.MERSENNE_31
-                            % _CMS_W
-                        ).alias("bucket"),
-                    )
-                    for i, (a, b) in enumerate(coeffs)
-                ]
-            )
-        ).alias("db"),
-    ).select("o_custkey", F.col("db.depth").alias("depth"), F.col("db.bucket").alias("bucket"))
-    sketch = buck.groupBy("depth", "bucket").agg(F.count(F.lit(1)).alias("c"))
-    keys = buck.distinct()
+    sketch = cms_partial(orders, "o_custkey")
+    keys = _bucket_rows(orders, "o_custkey", "o_custkey").distinct()
     est = (
         keys.join(F.broadcast(sketch), ["depth", "bucket"])
         .groupBy("o_custkey")
@@ -1244,9 +1261,6 @@ def agg_grouping_sets_df_api(spark: SparkSession, sf_dir: str) -> DataFrame:
 # don't cover: tail-accurate percentiles on long-tailed data, and a
 # distinct estimate whose state is a k-row value set you can union.
 
-_TD_SUB = 4  # sub-buckets per dyadic level: rank error <= d/4 at tail-distance d
-
-
 def _tdigest_centroids_sql() -> str:
     """The canonical batch t-digest build as SQL: global rank, dyadic
     tail-refined bucket id in EXACT integer arithmetic (bit-length via
@@ -1270,7 +1284,7 @@ def _tdigest_centroids_sql() -> str:
         FROM keyed),
     bucketed AS (
         SELECT cents, r0, n, side, lvl,
-               ((dd - (CAST(1 AS BIGINT) << CAST(lvl AS INT))) * {_TD_SUB})
+               ((dd - (CAST(1 AS BIGINT) << CAST(lvl AS INT))) * {TD_SUB})
                    // (CAST(1 AS BIGINT) << CAST(lvl AS INT)) AS sub
         FROM lvled)
     """
@@ -1297,7 +1311,7 @@ def _tdigest_centroids_sql() -> str:
         "input degenerates to exactly this: clusters sized by a scale "
         "function that refines toward the tails): rank every value, "
         "map each rank's distance-to-nearer-tail d onto dyadic level "
-        f"floor(log2 d) split {_TD_SUB} ways, and aggregate one centroid "
+        f"floor(log2 d) split {TD_SUB} ways, and aggregate one centroid "
         "per (side, level, sub) — weight, exact rank span, exact "
         "cents min/max, mean. Bucket rank-width is <= d/4 at tail "
         "distance d, i.e. RELATIVE rank error <= 25% that tightens to "
@@ -1340,7 +1354,7 @@ def agg_tdigest_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = F.expr("shiftleft(1L, CAST(lvl AS INT))")
     bucketed = lvled.withColumn(
-        "sub", F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {_TD_SUB})") / p
+        "sub", F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {TD_SUB})") / p
     ).withColumn("sub", F.floor("sub").cast("long"))
     return bucketed.groupBy("side", "lvl", "sub").agg(
         F.count(F.lit(1)).cast("long").alias("weight"),
@@ -1436,7 +1450,7 @@ def agg_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed = lvled.withColumn(
         "sub",
         F.floor(
-            F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {_TD_SUB})")
+            F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {TD_SUB})")
             / F.expr("shiftleft(1L, CAST(lvl AS INT))")
         ).cast("long"),
     ).persist()
@@ -1490,41 +1504,36 @@ def agg_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucketed.unpersist()
 
 
-_KMV_K = 128
-_KMV_HEX = 15  # 60-bit hashes: exact in BIGINT on both engines
-_KMV_SPACE = float(1 << 60)
-
-
 @query(
     "agg_kmv_distinct",
     oracle=f"""
     WITH h AS (
         SELECT DISTINCT ('0x' || substring(md5(CAST(l_partkey AS VARCHAR)),
-                                           1, {_KMV_HEX}))::BIGINT AS hv
+                                           1, {KMV_HEX}))::BIGINT AS hv
         FROM lineitem),
     topk AS (
         SELECT hv, row_number() OVER (ORDER BY hv) AS rk FROM h
-        QUALIFY rk <= {_KMV_K}),
+        QUALIFY rk <= {KMV_K}),
     stats AS (
         SELECT CAST(count(*) AS BIGINT) AS n_kept,
-               CAST(max(CASE WHEN rk = {_KMV_K} THEN hv END) AS BIGINT) AS kth
+               CAST(max(CASE WHEN rk = {KMV_K} THEN hv END) AS BIGINT) AS kth
         FROM topk),
     truth AS (
         SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) AS true_distinct
         FROM lineitem)
-    SELECT {_KMV_K} AS k, s.n_kept, s.kth AS kth_hash,
+    SELECT {KMV_K} AS k, s.n_kept, s.kth AS kth_hash,
            CAST(CASE WHEN s.kth IS NULL THEN s.n_kept
-                ELSE CAST(round(({_KMV_K} - 1) * {_KMV_SPACE!r}
+                ELSE CAST(round(({KMV_K} - 1) * {KMV_SPACE!r}
                                 / CAST(s.kth AS DOUBLE)) AS BIGINT)
                 END AS BIGINT) AS est_distinct,
            t.true_distinct,
            round(abs(CAST(CASE WHEN s.kth IS NULL THEN s.n_kept
-                     ELSE CAST(round(({_KMV_K} - 1) * {_KMV_SPACE!r}
+                     ELSE CAST(round(({KMV_K} - 1) * {KMV_SPACE!r}
                                      / CAST(s.kth AS DOUBLE)) AS BIGINT)
                      END AS DOUBLE) - t.true_distinct)
                  / t.true_distinct, 6) AS rel_error,
            abs(CAST(CASE WHEN s.kth IS NULL THEN s.n_kept
-               ELSE CAST(round(({_KMV_K} - 1) * {_KMV_SPACE!r}
+               ELSE CAST(round(({KMV_K} - 1) * {KMV_SPACE!r}
                                / CAST(s.kth AS DOUBLE)) AS BIGINT)
                END AS DOUBLE) - t.true_distinct)
                <= 0.35 * t.true_distinct + 1 AS within_bound
@@ -1555,45 +1564,14 @@ _KMV_SPACE = float(1 << 60)
 )
 def agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
-    h = li.select(
-        F.conv(F.substring(F.md5(F.col("l_partkey").cast("string")), 1, _KMV_HEX), 16, 10)
-        .cast("long")
-        .alias("hv")
-    ).distinct()
-    # orderBy().limit(k) plans as TakeOrderedAndProject: each partition
-    # keeps its k smallest, the driver merges — no global sort exchange.
-    topk = h.orderBy("hv").limit(_KMV_K)
-    stats = topk.agg(
-        F.count(F.lit(1)).cast("long").alias("n_kept"),
-        F.max("hv").cast("long").alias("mx"),
-    ).select(
+    served = serve_kmv_estimate(spark, kmv_partial(li, "l_partkey"))
+    return served.crossJoin(F.broadcast(true_distinct(li, "l_partkey"))).select(
+        "k",
         "n_kept",
-        F.when(F.col("n_kept") == _KMV_K, F.col("mx")).alias("kth"),
-    )
-    truth = li.agg(
-        F.countDistinct("l_partkey").cast("long").alias("true_distinct")
-    )
-    est = F.when(F.col("kth").isNull(), F.col("n_kept").cast("double")).otherwise(
-        F.round((_KMV_K - 1) * F.lit(_KMV_SPACE) / F.col("kth").cast("double"))
-    )
-    return (
-        stats.join(F.broadcast(truth))
-        .select(
-            F.lit(_KMV_K).cast("long").alias("k"),
-            "n_kept",
-            F.col("kth").alias("kth_hash"),
-            est.cast("long").alias("est_distinct"),
-            "true_distinct",
-            F.round(
-                F.abs(est.cast("long").cast("double") - F.col("true_distinct"))
-                / F.col("true_distinct"),
-                6,
-            ).alias("rel_error"),
-            (
-                F.abs(est.cast("long").cast("double") - F.col("true_distinct"))
-                <= 0.35 * F.col("true_distinct") + 1
-            ).alias("within_bound"),
-        )
+        F.col("kth").alias("kth_hash"),
+        "est_distinct",
+        "true_distinct",
+        *distinct_verdict(0.35),
     )
 
 
@@ -1613,14 +1591,14 @@ def agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cms_merge_oracle() -> str:
     from parquet_exporter_spark.functions import dedup as _D
 
-    coeffs = _D.hash_coefficients(_CMS_D)
+    coeffs = _D.hash_coefficients(CMS_D)
     seeds = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(coeffs))
     bh = _D.sql_base_hash_31("CAST(o_custkey AS VARCHAR)")
     return f"""
     WITH h AS (SELECT o_custkey, o_orderkey % 2 AS half, {bh} AS h FROM orders),
     buck AS (
         SELECT half, seed AS depth,
-               ((a * h + b) % {_D.MERSENNE_31}) % {_CMS_W} AS bucket
+               ((a * h + b) % {_D.MERSENNE_31}) % {CMS_W} AS bucket
         FROM h CROSS JOIN (VALUES {seeds}) AS t(seed, a, b)
     ),
     part_sketch AS (
@@ -1665,35 +1643,9 @@ def _cms_merge_oracle() -> str:
     ),
 )
 def agg_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from parquet_exporter_spark.functions import dedup as _D
-
     orders = read_table(spark, sf_dir, "orders")
-    coeffs = _D.hash_coefficients(_CMS_D)
-    h = orders.select(
-        (F.col("o_orderkey") % 2).alias("half"),
-        _D.base_hash_31(F.col("o_custkey").cast("string")).alias("h"),
-    )
-    buck = h.select(
-        "half",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("depth"),
-                        (
-                            (F.lit(a) * F.col("h") + F.lit(b))
-                            % _D.MERSENNE_31
-                            % _CMS_W
-                        ).alias("bucket"),
-                    )
-                    for i, (a, b) in enumerate(coeffs)
-                ]
-            )
-        ).alias("db"),
-    ).select("half", F.col("db.depth").alias("depth"), F.col("db.bucket").alias("bucket"))
-    part_sketch = buck.groupBy("half", "depth", "bucket").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
+    halves = orders.select("o_custkey", (F.col("o_orderkey") % 2).alias("half"))
+    part_sketch = cms_partial(halves, "o_custkey", batch_col="half")
     # THE MERGE: counter add over sketch states — input is <= 2*d*w rows.
     merged = part_sketch.groupBy("depth", "bucket").agg(
         F.sum(F.when(F.col("half") == 0, F.col("c")).otherwise(F.lit(0)))
@@ -1704,9 +1656,7 @@ def agg_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("c_half1"),
         F.sum("c").cast("long").alias("merged_c"),
     )
-    whole = buck.groupBy("depth", "bucket").agg(
-        F.count(F.lit(1)).cast("long").alias("whole_c")
-    )
+    whole = cms_partial(orders, "o_custkey").withColumnRenamed("c", "whole_c")
     return merged.join(whole, ["depth", "bucket"]).select(
         "depth",
         "bucket",
@@ -1724,44 +1674,44 @@ def agg_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH h AS (
         SELECT DISTINCT l_orderkey % 2 AS half,
                ('0x' || substring(md5(CAST(l_partkey AS VARCHAR)),
-                                  1, {_KMV_HEX}))::BIGINT AS hv
+                                  1, {KMV_HEX}))::BIGINT AS hv
         FROM lineitem),
     part_topk AS (
         SELECT half, hv,
                row_number() OVER (PARTITION BY half ORDER BY hv) AS rk
-        FROM h QUALIFY rk <= {_KMV_K}),
+        FROM h QUALIFY rk <= {KMV_K}),
     merged AS (
         SELECT hv, row_number() OVER (ORDER BY hv) AS rk
         FROM (SELECT DISTINCT hv FROM part_topk)
-        QUALIFY rk <= {_KMV_K}),
+        QUALIFY rk <= {KMV_K}),
     mstats AS (
         SELECT CAST(count(*) AS BIGINT) AS n_kept,
-               CAST(max(CASE WHEN rk = {_KMV_K} THEN hv END) AS BIGINT) AS kth
+               CAST(max(CASE WHEN rk = {KMV_K} THEN hv END) AS BIGINT) AS kth
         FROM merged),
     whole AS (
         SELECT hv, row_number() OVER (ORDER BY hv) AS rk
         FROM (SELECT DISTINCT hv FROM h)
-        QUALIFY rk <= {_KMV_K}),
+        QUALIFY rk <= {KMV_K}),
     wstats AS (
-        SELECT CAST(max(CASE WHEN rk = {_KMV_K} THEN hv END) AS BIGINT) AS kth_whole
+        SELECT CAST(max(CASE WHEN rk = {KMV_K} THEN hv END) AS BIGINT) AS kth_whole
         FROM whole),
     truth AS (
         SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) AS true_distinct
         FROM lineitem)
-    SELECT {_KMV_K} AS k, m.n_kept, m.kth AS kth_merged, w.kth_whole,
+    SELECT {KMV_K} AS k, m.n_kept, m.kth AS kth_merged, w.kth_whole,
            m.kth IS NOT DISTINCT FROM w.kth_whole AS merge_exact,
            CAST(CASE WHEN m.kth IS NULL THEN m.n_kept
-                ELSE CAST(round(({_KMV_K} - 1) * {_KMV_SPACE!r}
+                ELSE CAST(round(({KMV_K} - 1) * {KMV_SPACE!r}
                                 / CAST(m.kth AS DOUBLE)) AS BIGINT)
                 END AS BIGINT) AS est_distinct,
            t.true_distinct,
            round(abs(CAST(CASE WHEN m.kth IS NULL THEN m.n_kept
-                     ELSE CAST(round(({_KMV_K} - 1) * {_KMV_SPACE!r}
+                     ELSE CAST(round(({KMV_K} - 1) * {KMV_SPACE!r}
                                      / CAST(m.kth AS DOUBLE)) AS BIGINT)
                      END AS DOUBLE) - t.true_distinct)
                  / t.true_distinct, 6) AS rel_error,
            abs(CAST(CASE WHEN m.kth IS NULL THEN m.n_kept
-               ELSE CAST(round(({_KMV_K} - 1) * {_KMV_SPACE!r}
+               ELSE CAST(round(({KMV_K} - 1) * {KMV_SPACE!r}
                                / CAST(m.kth AS DOUBLE)) AS BIGINT)
                END AS DOUBLE) - t.true_distinct)
                <= 0.35 * t.true_distinct + 1 AS within_bound
@@ -1787,85 +1737,29 @@ def agg_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_kmv_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
-    h = li.select(
-        (F.col("l_orderkey") % 2).alias("half"),
-        F.conv(
-            F.substring(F.md5(F.col("l_partkey").cast("string")), 1, _KMV_HEX),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("hv"),
-    ).distinct()
-    # per-half bottom-k: one ranking window partitioned by half
-    wh = Window.partitionBy("half").orderBy("hv")
-    part_topk = (
-        h.withColumn("rk", F.row_number().over(wh))
-        .filter(F.col("rk") <= _KMV_K)
-        .select("half", "hv")
+    halves = li.select("l_partkey", (F.col("l_orderkey") % 2).alias("half"))
+    # THE MERGE: serve_kmv_estimate unions + re-truncates the <= 2k
+    # per-half bottom-k rows.
+    served = serve_kmv_estimate(
+        spark, kmv_partial(halves, "l_partkey", batch_col="half")
     )
-    # THE MERGE: union + re-truncate over <= 2k sketch rows (distinct —
-    # the same partkey hash can appear under both halves).
-    merged = (
-        part_topk.select("hv").distinct().orderBy("hv").limit(_KMV_K)
-    )
-    mstats = merged.agg(
-        F.count(F.lit(1)).cast("long").alias("n_kept"),
-        F.max("hv").cast("long").alias("mx"),
-    ).select(
-        "n_kept",
-        F.when(F.col("n_kept") == _KMV_K, F.col("mx")).alias("kth_merged"),
-    )
-    whole = h.select("hv").distinct().orderBy("hv").limit(_KMV_K)
-    wstats = whole.agg(
-        F.count(F.lit(1)).cast("long").alias("wn"),
-        F.max("hv").cast("long").alias("wmx"),
-    ).select(
-        F.when(F.col("wn") == _KMV_K, F.col("wmx")).alias("kth_whole"),
-    )
-    truth = li.agg(
-        F.countDistinct("l_partkey").cast("long").alias("true_distinct")
-    )
-    est = F.when(
-        F.col("kth_merged").isNull(), F.col("n_kept").cast("double")
-    ).otherwise(
-        F.round(
-            (_KMV_K - 1) * F.lit(_KMV_SPACE) / F.col("kth_merged").cast("double")
-        )
+    whole = serve_kmv_estimate(spark, kmv_partial(li, "l_partkey")).select(
+        F.col("kth").alias("kth_whole")
     )
     return (
-        mstats.join(F.broadcast(wstats))
-        .join(F.broadcast(truth))
+        served.crossJoin(F.broadcast(whole))
+        .crossJoin(F.broadcast(true_distinct(li, "l_partkey")))
         .select(
-            F.lit(_KMV_K).cast("long").alias("k"),
+            "k",
             "n_kept",
-            "kth_merged",
+            F.col("kth").alias("kth_merged"),
             "kth_whole",
-            F.col("kth_merged").eqNullSafe(F.col("kth_whole")).alias("merge_exact"),
-            est.cast("long").alias("est_distinct"),
+            F.col("kth").eqNullSafe(F.col("kth_whole")).alias("merge_exact"),
+            "est_distinct",
             "true_distinct",
-            F.round(
-                F.abs(est.cast("long").cast("double") - F.col("true_distinct"))
-                / F.col("true_distinct"),
-                6,
-            ).alias("rel_error"),
-            (
-                F.abs(est.cast("long").cast("double") - F.col("true_distinct"))
-                <= 0.35 * F.col("true_distinct") + 1
-            ).alias("within_bound"),
+            *distinct_verdict(0.35),
         )
     )
-
-
-_HLL_P = 9  # 2^9 = 512 registers: std error 1.04/sqrt(512) ~ 4.6%
-_HLL_M = 1 << _HLL_P
-_HLL_REM = 60 - _HLL_P  # low-order hash bits that feed rho (51)
-_HLL_RMAX = _HLL_REM + 1  # rho of an all-zero remainder (52)
-# alpha_m * m^2 * 2^RMAX, folded to ONE literal in Python so each engine
-# performs exactly one IEEE division by the exact integer register sum.
-_HLL_ALPHA = 0.7213 / (1.0 + 1.079 / _HLL_M)
-_HLL_NUM = _HLL_ALPHA * float(_HLL_M) * float(_HLL_M) * float(1 << _HLL_RMAX)
-_HLL_LC_CUT = 2.5 * _HLL_M  # below this raw estimate, linear counting wins
 
 
 @query(
@@ -1873,40 +1767,40 @@ _HLL_LC_CUT = 2.5 * _HLL_M  # below this raw estimate, linear counting wins
     oracle=f"""
     WITH h AS (
         SELECT DISTINCT ('0x' || substring(md5(CAST(l_partkey AS VARCHAR)),
-                                           1, {_KMV_HEX}))::BIGINT AS hv
+                                           1, {HLL_HEX}))::BIGINT AS hv
         FROM lineitem),
     split AS (
-        SELECT hv // {1 << _HLL_REM} AS bucket,
-               hv % {1 << _HLL_REM} AS w
+        SELECT hv // {1 << HLL_REM} AS bucket,
+               hv % {1 << HLL_REM} AS w
         FROM h),
     rho AS (
         SELECT bucket,
-               CASE WHEN w = 0 THEN {_HLL_RMAX}
-                    ELSE {_HLL_REM} + 1 - length(format('{{:b}}', w))
+               CASE WHEN w = 0 THEN {HLL_RMAX}
+                    ELSE {HLL_REM} + 1 - length(format('{{:b}}', w))
                END AS rho
         FROM split),
     regs AS (
         SELECT bucket, CAST(max(rho) AS BIGINT) AS r FROM rho GROUP BY bucket),
     state AS (
         SELECT CAST(count(*) AS BIGINT) AS n_nonempty,
-               CAST({_HLL_M} - count(*) AS BIGINT) AS v_empty,
-               CAST(sum(CAST(1 AS BIGINT) << CAST({_HLL_RMAX} - r AS INT))
-                    + ({_HLL_M} - count(*))
-                      * (CAST(1 AS BIGINT) << {_HLL_RMAX}) AS BIGINT) AS s_scaled
+               CAST({HLL_M} - count(*) AS BIGINT) AS v_empty,
+               CAST(sum(CAST(1 AS BIGINT) << CAST({HLL_RMAX} - r AS INT))
+                    + ({HLL_M} - count(*))
+                      * (CAST(1 AS BIGINT) << {HLL_RMAX}) AS BIGINT) AS s_scaled
         FROM regs),
     est AS (
         SELECT n_nonempty, v_empty, s_scaled,
-               CAST(CASE WHEN {_HLL_NUM!r} / CAST(s_scaled AS DOUBLE)
-                              <= {_HLL_LC_CUT!r} AND v_empty > 0
-                    THEN round({float(_HLL_M)!r}
-                               * ln({float(_HLL_M)!r} / CAST(v_empty AS DOUBLE)))
-                    ELSE round({_HLL_NUM!r} / CAST(s_scaled AS DOUBLE))
+               CAST(CASE WHEN {HLL_NUM!r} / CAST(s_scaled AS DOUBLE)
+                              <= {HLL_LC_CUT!r} AND v_empty > 0
+                    THEN round({float(HLL_M)!r}
+                               * ln({float(HLL_M)!r} / CAST(v_empty AS DOUBLE)))
+                    ELSE round({HLL_NUM!r} / CAST(s_scaled AS DOUBLE))
                     END AS BIGINT) AS est_distinct
         FROM state),
     truth AS (
         SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) AS true_distinct
         FROM lineitem)
-    SELECT {_HLL_M} AS m, e.n_nonempty, e.v_empty, e.s_scaled, e.est_distinct,
+    SELECT {HLL_M} AS m, e.n_nonempty, e.v_empty, e.s_scaled, e.est_distinct,
            t.true_distinct,
            round(abs(CAST(e.est_distinct AS DOUBLE) - t.true_distinct)
                  / t.true_distinct, 6) AS rel_error,
@@ -1941,74 +1835,15 @@ _HLL_LC_CUT = 2.5 * _HLL_M  # below this raw estimate, linear counting wins
 )
 def agg_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
-    h = li.select(
-        F.conv(
-            F.substring(F.md5(F.col("l_partkey").cast("string")), 1, _KMV_HEX),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("hv")
-    ).distinct()
-    # exact integer div/mod on the 60-bit long (float / would round:
-    # 2^60 > 2^53) — DuckDB's BIGINT // matches Spark's div exactly
-    split = h.select(
-        F.expr(f"hv div {1 << _HLL_REM}").alias("bucket"),
-        (F.col("hv") % (1 << _HLL_REM)).alias("w"),
-    )
-    rho = split.select(
-        "bucket",
-        F.when(F.col("w") == 0, F.lit(_HLL_RMAX))
-        .otherwise(
-            _HLL_REM + 1 - F.length(F.conv(F.col("w").cast("string"), 10, 2))
-        )
-        .cast("long")
-        .alias("rho"),
-    )
-    regs = rho.groupBy("bucket").agg(F.max("rho").cast("long").alias("r"))
-    state = regs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_nonempty"),
-        (F.lit(_HLL_M) - F.count(F.lit(1))).cast("long").alias("v_empty"),
-        (
-            F.sum(F.expr(f"shiftleft(1L, CAST({_HLL_RMAX} - r AS INT))"))
-            + (F.lit(_HLL_M) - F.count(F.lit(1)))
-            * F.lit(1 << _HLL_RMAX)
-        )
-        .cast("long")
-        .alias("s_scaled"),
-    )
-    raw = F.lit(_HLL_NUM) / F.col("s_scaled").cast("double")
-    est = (
-        F.when(
-            (raw <= F.lit(_HLL_LC_CUT)) & (F.col("v_empty") > 0),
-            F.round(
-                F.lit(float(_HLL_M))
-                * F.log(F.lit(float(_HLL_M)) / F.col("v_empty").cast("double"))
-            ),
-        )
-        .otherwise(F.round(raw))
-        .cast("long")
-    )
-    truth = li.agg(
-        F.countDistinct("l_partkey").cast("long").alias("true_distinct")
-    )
-    withest = state.withColumn("est_distinct", est)
-    return withest.join(F.broadcast(truth)).select(
-        F.lit(_HLL_M).cast("long").alias("m"),
+    served = serve_hll_estimate(spark, hll_partial(li, "l_partkey"))
+    return served.crossJoin(F.broadcast(true_distinct(li, "l_partkey"))).select(
+        "m",
         "n_nonempty",
         "v_empty",
         "s_scaled",
         "est_distinct",
         "true_distinct",
-        F.round(
-            F.abs(F.col("est_distinct").cast("double") - F.col("true_distinct"))
-            / F.col("true_distinct"),
-            6,
-        ).alias("rel_error"),
-        (
-            F.abs(F.col("est_distinct").cast("double") - F.col("true_distinct"))
-            <= 0.15 * F.col("true_distinct") + 1
-        ).alias("within_bound"),
+        *distinct_verdict(0.15),
     )
 
 
@@ -2039,7 +1874,7 @@ def _td_half_centroids_sql() -> str:
         FROM keyed),
     bucketed AS (
         SELECT cents, half, side, lvl,
-               ((dd - (CAST(1 AS BIGINT) << CAST(lvl AS INT))) * {_TD_SUB})
+               ((dd - (CAST(1 AS BIGINT) << CAST(lvl AS INT))) * {TD_SUB})
                    // (CAST(1 AS BIGINT) << CAST(lvl AS INT)) AS sub
         FROM lvled),
     cent AS MATERIALIZED (
@@ -2076,7 +1911,7 @@ def _td_half_centroids_sql() -> str:
         FROM resided),
     mbucket AS (
         SELECT *,
-               ((dd2 - (CAST(1 AS BIGINT) << CAST(lvl2 AS INT))) * {_TD_SUB})
+               ((dd2 - (CAST(1 AS BIGINT) << CAST(lvl2 AS INT))) * {TD_SUB})
                    // (CAST(1 AS BIGINT) << CAST(lvl2 AS INT)) AS sub2
         FROM relvled),
     mcent AS MATERIALIZED (
@@ -2165,165 +2000,17 @@ def _td_half_centroids_sql() -> str:
     ),
 )
 def agg_tdigest_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
-    wh = Window.partitionBy("half").orderBy("l_extendedprice")
-    ranked = li.select(
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        (F.col("l_orderkey") % 2).alias("half"),
-        "l_extendedprice",
-    ).select(
-        "cents",
-        "half",
-        (F.row_number().over(wh) - 1).cast("long").alias("r0"),
-        F.count(F.lit(1)).over(Window.partitionBy("half")).cast("long").alias("nh"),
+    # the half column is named batch_id so merge_tdigest's order (lo, hi,
+    # batch_id, side, lvl, sub) breaks value-bound ties by half
+    cents = lineitem_cents(spark, sf_dir, (F.col("l_orderkey") % 2).alias("batch_id"))
+    # THE MERGE: serve_tdigest_quantiles re-bins the O(log n) centroid
+    # rows of both halves, never data rows.
+    served = serve_tdigest_quantiles(
+        spark,
+        tdigest_partial(cents, "cents", batch_col="batch_id"),
+        list(_TD_PROBES),
     )
-    keyed = ranked.select(
-        "cents",
-        "half",
-        F.when(2 * F.col("r0") < F.col("nh"), 0).otherwise(1).alias("side"),
-        F.when(2 * F.col("r0") < F.col("nh"), F.col("r0") + 1)
-        .otherwise(F.col("nh") - F.col("r0"))
-        .alias("dd"),
-    )
-    lvled = keyed.withColumn(
-        "lvl", (F.length(F.conv(F.col("dd").cast("string"), 10, 2)) - 1).cast("long")
-    )
-    p2 = F.expr("shiftleft(1L, CAST(lvl AS INT))")
-    bucketed = lvled.withColumn(
-        "sub",
-        F.floor(F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {_TD_SUB})") / p2)
-        .cast("long"),
-    )
-    cent = bucketed.groupBy("half", "side", "lvl", "sub").agg(
-        F.count(F.lit(1)).cast("long").alias("w"),
-        F.min("cents").cast("long").alias("lo"),
-        F.max("cents").cast("long").alias("hi"),
-        F.sum("cents").cast("long").alias("sc"),
-    )
-    # THE MERGE: sort the O(log n) centroid rows by value bounds, assign
-    # each centroid's cum-weight midpoint rank to a merged dyadic cell.
-    # n = sum of centroid weights — computed over SKETCH rows, never a
-    # data-sized global window.
-    wo = Window.orderBy("lo", "hi", "half", "side", "lvl", "sub")
-    ordered = cent.withColumn(
-        "cw",
-        F.coalesce(
-            F.sum("w").over(wo.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ).cast("long"),
-    ).withColumn(
-        "n",
-        F.sum("w")
-        .over(Window.partitionBy().rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-        .cast("long"),
-    )
-    rekeyed = ordered.withColumn("mid", F.col("cw") + F.expr("(w - 1) div 2"))
-    resided = rekeyed.select(
-        "*",
-        F.when(2 * F.col("mid") < F.col("n"), 0).otherwise(1).alias("side2"),
-        F.when(2 * F.col("mid") < F.col("n"), F.col("mid") + 1)
-        .otherwise(F.col("n") - F.col("mid"))
-        .alias("dd2"),
-    )
-    relvled = resided.withColumn(
-        "lvl2",
-        (F.length(F.conv(F.col("dd2").cast("string"), 10, 2)) - 1).cast("long"),
-    )
-    q2 = F.expr("shiftleft(1L, CAST(lvl2 AS INT))")
-    mbucket = relvled.withColumn(
-        "sub2",
-        F.floor(
-            F.expr(f"((dd2 - shiftleft(1L, CAST(lvl2 AS INT))) * {_TD_SUB})") / q2
-        ).cast("long"),
-    )
-    mcent = mbucket.groupBy("side2", "lvl2", "sub2").agg(
-        F.sum("w").cast("long").alias("weight"),
-        F.min("lo").cast("long").alias("mlo"),
-        F.max("hi").cast("long").alias("mhi"),
-        F.sum("sc").cast("long").alias("msc"),
-        F.count(F.lit(1)).cast("long").alias("n_inputs"),
-        F.min("cw").cast("long").alias("cw_start"),
-        (F.max(F.col("cw") + F.col("w")) - 1).cast("long").alias("cw_end"),
-        F.first("n").cast("long").alias("n"),
-    )
-    probes = tiny_df(spark, [(p,) for p in _TD_PROBES], "p double")
-    targets = (
-        probes.crossJoin(F.broadcast(mcent.select("n").limit(1)))
-        .select("p", F.floor(F.col("p") * (F.col("n") - 1)).cast("long").alias("t"))
-    )
-    served = targets.join(
-        F.broadcast(mcent),
-        (F.col("t") >= F.col("cw_start")) & (F.col("t") <= F.col("cw_end")),
-    ).select(
-        "p",
-        "t",
-        "weight",
-        "n_inputs",
-        "n",
-        (
-            F.col("mlo")
-            + F.when(
-                F.col("weight") > 1,
-                (F.col("mhi") - F.col("mlo")).cast("double")
-                * (
-                    (F.col("t") - F.col("cw_start")).cast("double")
-                    / (F.col("weight") - 1).cast("double")
-                ),
-            ).otherwise(F.lit(0.0))
-        ).alias("est_cents"),
-    )
-    wg = Window.orderBy("l_extendedprice")
-    gr = li.select(
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        (F.row_number().over(wg) - 1).cast("long").alias("r0g"),
-    )
-    exact = (
-        served.select("p", F.col("t").alias("r0g"))
-        .join(gr, "r0g")
-        .select("p", F.col("cents").alias("exact_cents"))
-    )
-    ranks = (
-        gr.crossJoin(F.broadcast(served.select("p", "est_cents")))
-        .groupBy("p")
-        .agg(
-            F.sum(
-                F.when(F.col("cents") < F.col("est_cents"), 1).otherwise(0)
-            )
-            .cast("long")
-            .alias("lt"),
-            F.sum(
-                F.when(F.col("cents") <= F.col("est_cents"), 1).otherwise(0)
-            )
-            .cast("long")
-            .alias("le"),
-        )
-    )
-    rank_err = (
-        F.when(F.col("lt") > F.col("t"), F.col("lt") - F.col("t"))
-        .when(F.col("le") - 1 < F.col("t"), F.col("t") - (F.col("le") - 1))
-        .otherwise(F.lit(0))
-        .cast("long")
-    )
-    d_tail = (
-        F.when(F.col("t") + 1 < F.col("n") - F.col("t"), F.col("t") + 1)
-        .otherwise(F.col("n") - F.col("t"))
-        .cast("long")
-    )
-    return (
-        served.join(exact, "p")
-        .join(ranks, "p")
-        .select(
-            "p",
-            F.col("t").alias("target_rank"),
-            F.col("weight").alias("merged_weight"),
-            "n_inputs",
-            F.round(F.col("est_cents") / 100.0, 4).alias("est_price"),
-            F.round(F.col("exact_cents") / 100.0, 4).alias("exact_price"),
-            rank_err.alias("rank_err"),
-            d_tail.alias("d_tail"),
-            (rank_err.cast("double") <= 0.35 * d_tail + 8).alias("within_bound"),
-        )
-    )
+    return tdigest_verdict(served, cents)
 
 
 @query(
@@ -2332,13 +2019,13 @@ def agg_tdigest_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH h AS (
         SELECT DISTINCT l_orderkey % 2 AS half,
                ('0x' || substring(md5(CAST(l_partkey AS VARCHAR)),
-                                  1, {_KMV_HEX}))::BIGINT AS hv
+                                  1, {HLL_HEX}))::BIGINT AS hv
         FROM lineitem),
     rho AS (
-        SELECT half, hv // {1 << _HLL_REM} AS bucket,
-               CASE WHEN hv % {1 << _HLL_REM} = 0 THEN {_HLL_RMAX}
-                    ELSE {_HLL_REM} + 1
-                         - length(format('{{:b}}', hv % {1 << _HLL_REM}))
+        SELECT half, hv // {1 << HLL_REM} AS bucket,
+               CASE WHEN hv % {1 << HLL_REM} = 0 THEN {HLL_RMAX}
+                    ELSE {HLL_REM} + 1
+                         - length(format('{{:b}}', hv % {1 << HLL_REM}))
                END AS rho
         FROM h),
     pregs AS MATERIALIZED (
@@ -2354,24 +2041,24 @@ def agg_tdigest_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE m.r IS DISTINCT FROM w.r),
     mstate AS (
         SELECT CAST(count(*) AS BIGINT) AS n_nonempty,
-               CAST({_HLL_M} - count(*) AS BIGINT) AS v_empty,
-               CAST(sum(CAST(1 AS BIGINT) << CAST({_HLL_RMAX} - r AS INT))
-                    + ({_HLL_M} - count(*))
-                      * (CAST(1 AS BIGINT) << {_HLL_RMAX}) AS BIGINT) AS s_scaled
+               CAST({HLL_M} - count(*) AS BIGINT) AS v_empty,
+               CAST(sum(CAST(1 AS BIGINT) << CAST({HLL_RMAX} - r AS INT))
+                    + ({HLL_M} - count(*))
+                      * (CAST(1 AS BIGINT) << {HLL_RMAX}) AS BIGINT) AS s_scaled
         FROM mregs),
     est AS (
         SELECT n_nonempty, v_empty, s_scaled,
-               CAST(CASE WHEN {_HLL_NUM!r} / CAST(s_scaled AS DOUBLE)
-                              <= {_HLL_LC_CUT!r} AND v_empty > 0
-                    THEN round({float(_HLL_M)!r}
-                               * ln({float(_HLL_M)!r} / CAST(v_empty AS DOUBLE)))
-                    ELSE round({_HLL_NUM!r} / CAST(s_scaled AS DOUBLE))
+               CAST(CASE WHEN {HLL_NUM!r} / CAST(s_scaled AS DOUBLE)
+                              <= {HLL_LC_CUT!r} AND v_empty > 0
+                    THEN round({float(HLL_M)!r}
+                               * ln({float(HLL_M)!r} / CAST(v_empty AS DOUBLE)))
+                    ELSE round({HLL_NUM!r} / CAST(s_scaled AS DOUBLE))
                     END AS BIGINT) AS est_distinct
         FROM mstate),
     truth AS (
         SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) AS true_distinct
         FROM lineitem)
-    SELECT {_HLL_M} AS m, e.n_nonempty, e.v_empty, e.s_scaled,
+    SELECT {HLL_M} AS m, e.n_nonempty, e.v_empty, e.s_scaled,
            x.n_register_mismatch,
            x.n_register_mismatch = 0 AS merge_exact,
            e.est_distinct, t.true_distinct,
@@ -2400,71 +2087,23 @@ def agg_tdigest_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
-    h = li.select(
-        (F.col("l_orderkey") % 2).alias("half"),
-        F.conv(
-            F.substring(F.md5(F.col("l_partkey").cast("string")), 1, _KMV_HEX),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("hv"),
-    ).distinct()
-    rho = h.select(
-        "half",
-        F.expr(f"hv div {1 << _HLL_REM}").alias("bucket"),
-        F.when(F.col("hv") % (1 << _HLL_REM) == 0, F.lit(_HLL_RMAX))
-        .otherwise(
-            _HLL_REM
-            + 1
-            - F.length(
-                F.conv((F.col("hv") % (1 << _HLL_REM)).cast("string"), 10, 2)
-            )
-        )
-        .cast("long")
-        .alias("rho"),
-    )
-    pregs = rho.groupBy("half", "bucket").agg(F.max("rho").cast("long").alias("r"))
-    # THE MERGE: register-wise max over <= 2m sketch rows.
-    mregs = pregs.groupBy("bucket").agg(F.max("r").cast("long").alias("r"))
-    wregs = rho.groupBy("bucket").agg(F.max("rho").cast("long").alias("r"))
+    halves = li.select("l_partkey", (F.col("l_orderkey") % 2).alias("half"))
+    part = hll_partial(halves, "l_partkey", batch_col="half")
+    # THE MERGE: serve_hll_estimate takes the register-wise max over the
+    # <= 2m per-half register rows.
+    served = serve_hll_estimate(spark, part)
+    whole = hll_partial(li, "l_partkey").withColumnRenamed("r", "wr")
     mism = (
-        mregs.withColumnRenamed("r", "mr")
-        .join(wregs.withColumnRenamed("r", "wr"), "bucket", "full")
-        .filter(~F.col("mr").eqNullSafe(F.col("wr")))
+        merge_hll(part)
+        .join(whole, "bucket", "full")
+        .filter(~F.col("r").eqNullSafe(F.col("wr")))
         .agg(F.count(F.lit(1)).cast("long").alias("n_register_mismatch"))
     )
-    mstate = mregs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_nonempty"),
-        (F.lit(_HLL_M) - F.count(F.lit(1))).cast("long").alias("v_empty"),
-        (
-            F.sum(F.expr(f"shiftleft(1L, CAST({_HLL_RMAX} - r AS INT))"))
-            + (F.lit(_HLL_M) - F.count(F.lit(1))) * F.lit(1 << _HLL_RMAX)
-        )
-        .cast("long")
-        .alias("s_scaled"),
-    )
-    raw = F.lit(_HLL_NUM) / F.col("s_scaled").cast("double")
-    est = (
-        F.when(
-            (raw <= F.lit(_HLL_LC_CUT)) & (F.col("v_empty") > 0),
-            F.round(
-                F.lit(float(_HLL_M))
-                * F.log(F.lit(float(_HLL_M)) / F.col("v_empty").cast("double"))
-            ),
-        )
-        .otherwise(F.round(raw))
-        .cast("long")
-    )
-    truth = li.agg(
-        F.countDistinct("l_partkey").cast("long").alias("true_distinct")
-    )
     return (
-        mstate.withColumn("est_distinct", est)
-        .join(F.broadcast(mism))
-        .join(F.broadcast(truth))
+        served.crossJoin(F.broadcast(mism))
+        .crossJoin(F.broadcast(true_distinct(li, "l_partkey")))
         .select(
-            F.lit(_HLL_M).cast("long").alias("m"),
+            "m",
             "n_nonempty",
             "v_empty",
             "s_scaled",
@@ -2472,19 +2111,7 @@ def agg_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_register_mismatch") == 0).alias("merge_exact"),
             "est_distinct",
             "true_distinct",
-            F.round(
-                F.abs(
-                    F.col("est_distinct").cast("double") - F.col("true_distinct")
-                )
-                / F.col("true_distinct"),
-                6,
-            ).alias("rel_error"),
-            (
-                F.abs(
-                    F.col("est_distinct").cast("double") - F.col("true_distinct")
-                )
-                <= 0.15 * F.col("true_distinct") + 1
-            ).alias("within_bound"),
+            *distinct_verdict(0.15),
         )
     )
 
@@ -2494,16 +2121,16 @@ def agg_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH a AS (
         SELECT DISTINCT ('0x' || substring(md5(CAST(o_custkey AS VARCHAR)),
-                                           1, {_KMV_HEX}))::BIGINT AS hv
+                                           1, {KMV_HEX}))::BIGINT AS hv
         FROM orders WHERE o_orderkey % 2 = 0),
     b AS (
         SELECT DISTINCT ('0x' || substring(md5(CAST(o_custkey AS VARCHAR)),
-                                           1, {_KMV_HEX}))::BIGINT AS hv
+                                           1, {KMV_HEX}))::BIGINT AS hv
         FROM orders WHERE o_orderkey % 2 = 1),
     u AS (
         SELECT hv, row_number() OVER (ORDER BY hv) AS rk
         FROM (SELECT hv FROM a UNION SELECT hv FROM b)
-        QUALIFY rk <= {_KMV_K}),
+        QUALIFY rk <= {KMV_K}),
     marked AS (
         SELECT u.hv,
                CASE WHEN u.hv IN (SELECT hv FROM a)
@@ -2521,7 +2148,7 @@ def agg_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
                    bool_or(o_orderkey % 2 = 0) AS in_a,
                    bool_or(o_orderkey % 2 = 1) AS in_b
             FROM orders GROUP BY o_custkey))
-    SELECT {_KMV_K} AS k, s.n_union_sample, s.n_both,
+    SELECT {KMV_K} AS k, s.n_union_sample, s.n_both,
            round(CAST(s.n_both AS DOUBLE) / s.n_union_sample, 6) AS est_jaccard,
            round(CAST(t.n_inter AS DOUBLE) / t.n_union, 6) AS exact_jaccard,
            round(abs(CAST(s.n_both AS DOUBLE) / s.n_union_sample
@@ -2552,7 +2179,7 @@ def agg_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(spark, sf_dir, "orders")
     hv = (
         F.conv(
-            F.substring(F.md5(F.col("o_custkey").cast("string")), 1, _KMV_HEX),
+            F.substring(F.md5(F.col("o_custkey").cast("string")), 1, KMV_HEX),
             16,
             10,
         )
@@ -2561,7 +2188,7 @@ def agg_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = orders.filter(F.col("o_orderkey") % 2 == 0).select(hv).distinct()
     b = orders.filter(F.col("o_orderkey") % 2 == 1).select(hv).distinct()
-    u = a.union(b).distinct().orderBy("hv").limit(_KMV_K)
+    u = a.union(b).distinct().orderBy("hv").limit(KMV_K)
     marked = (
         u.join(F.broadcast(a.withColumn("in_a", F.lit(1))), "hv", "left")
         .join(F.broadcast(b.withColumn("in_b", F.lit(1))), "hv", "left")
@@ -2597,7 +2224,7 @@ def agg_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         stats.join(F.broadcast(truth))
         .select(
-            F.lit(_KMV_K).cast("long").alias("k"),
+            F.lit(KMV_K).cast("long").alias("k"),
             "n_union_sample",
             "n_both",
             F.round(est_j, 6).alias("est_jaccard"),
@@ -2633,7 +2260,7 @@ _TDG_PROBES = (0.5, 0.95)
         FROM keyed),
     bucketed AS MATERIALIZED (
         SELECT grp, cents, r0, nh, side, lvl,
-               ((dd - (CAST(1 AS BIGINT) << CAST(lvl AS INT))) * {_TD_SUB})
+               ((dd - (CAST(1 AS BIGINT) << CAST(lvl AS INT))) * {TD_SUB})
                    // (CAST(1 AS BIGINT) << CAST(lvl AS INT)) AS sub
         FROM lvled),
     cent AS MATERIALIZED (
@@ -2727,7 +2354,7 @@ def agg_tdigest_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed = lvled.withColumn(
         "sub",
         F.floor(
-            F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {_TD_SUB})")
+            F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {TD_SUB})")
             / F.expr("shiftleft(1L, CAST(lvl AS INT))")
         ).cast("long"),
     ).persist()
@@ -2885,7 +2512,7 @@ def agg_tdigest_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed = lvled.withColumn(
         "sub",
         F.floor(
-            F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {_TD_SUB})")
+            F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {TD_SUB})")
             / F.expr("shiftleft(1L, CAST(lvl AS INT))")
         ).cast("long"),
     ).persist()
@@ -3004,7 +2631,6 @@ def agg_tdigest_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucketed.unpersist()
 
 
-_HDR_SUB = 8  # linear subbuckets per octave: relative width <= 1/8
 _HDR_PROBES = (0.5, 0.99)
 
 
@@ -3024,7 +2650,7 @@ _HDR_PROBES = (0.5, 0.99)
     bucketed AS MATERIALIZED (
         SELECT cents, r0, n, lvl,
                ((cents - (CAST(1 AS BIGINT) << CAST(lvl - 1 AS INT)))
-                * {_HDR_SUB})
+                * {HDR_SUB})
                    // (CAST(1 AS BIGINT) << CAST(lvl - 1 AS INT)) AS sub
         FROM lvled),
     hist AS MATERIALIZED (
@@ -3064,7 +2690,7 @@ _HDR_PROBES = (0.5, 0.99)
            round(CAST(h.hi - h.lo AS DOUBLE) / h.lo, 6) AS rel_bucket_width,
            x.exact_cents BETWEEN h.lo AND h.hi AS within_bucket,
            CAST(h.hi - h.lo AS DOUBLE) / h.lo
-               <= 1.0 / {_HDR_SUB} AS width_bound_ok
+               <= 1.0 / {HDR_SUB} AS width_bound_ok
     FROM hit h JOIN exact x USING (p)
     """,
     doc=(
@@ -3073,7 +2699,7 @@ _HDR_PROBES = (0.5, 0.99)
         "latency percentiles (vs the fixed-grid sketch's absolute "
         "2-bin bound, which needs [lo, width] chosen in advance, and "
         "the t-digest's rank-space bound): each value lands in (octave "
-        f"= bit length, one of {_HDR_SUB} linear subbuckets), so a "
+        f"= bit length, one of {HDR_SUB} linear subbuckets), so a "
         "bucket's value span is structurally <= lo/8 — a 12.5% "
         "relative-width ceiling at ANY magnitude, emitted per serve as "
         "width_bound_ok next to the measured rel_bucket_width and the "
@@ -3092,86 +2718,9 @@ _HDR_PROBES = (0.5, 0.99)
     ),
 )
 def agg_hdr_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
-    w = Window.orderBy("l_extendedprice")
-    ranked = li.select(
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        (F.row_number().over(w) - 1).cast("long").alias("r0"),
-    ).withColumn("n", F.count(F.lit(1)).over(Window.partitionBy()))
-    lvled = ranked.withColumn(
-        "lvl", F.length(F.conv(F.col("cents").cast("string"), 10, 2)).cast("long")
-    )
-    bucketed = lvled.withColumn(
-        "sub",
-        F.floor(
-            F.expr(
-                f"((cents - shiftleft(1L, CAST(lvl - 1 AS INT))) * {_HDR_SUB})"
-            )
-            / F.expr("shiftleft(1L, CAST(lvl - 1 AS INT))")
-        ).cast("long"),
-    ).persist()
-    try:
-        hist = bucketed.groupBy("lvl", "sub").agg(
-            F.count(F.lit(1)).cast("long").alias("c"),
-            F.min("cents").cast("long").alias("lo"),
-            F.max("cents").cast("long").alias("hi"),
-            F.first("n").cast("long").alias("n"),
-        )
-        wo = Window.orderBy("lvl", "sub")
-        cum = hist.withColumn(
-            "cw",
-            F.coalesce(
-                F.sum("c").over(wo.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0),
-            ).cast("long"),
-        )
-        probes = tiny_df(spark, [(p,) for p in _HDR_PROBES], "p double")
-        targets = (
-            probes.crossJoin(F.broadcast(cum.select("n").limit(1)))
-            .select(
-                "p",
-                F.floor(F.col("p") * (F.col("n") - 1)).cast("long").alias("t"),
-            )
-        )
-        hit = targets.join(
-            F.broadcast(cum),
-            (F.col("t") >= F.col("cw")) & (F.col("t") < F.col("cw") + F.col("c")),
-        )
-        exact = (
-            targets.withColumnRenamed("t", "r0")
-            .join(bucketed.select("r0", "cents"), "r0")
-            .select("p", F.col("cents").alias("exact_cents"))
-        )
-        est = F.col("lo") + F.when(
-            F.col("c") > 1,
-            (F.col("hi") - F.col("lo")).cast("double")
-            * (
-                (F.col("t") - F.col("cw")).cast("double")
-                / (F.col("c") - 1).cast("double")
-            ),
-        ).otherwise(F.lit(0.0))
-        out = hit.join(exact, "p").select(
-            "p",
-            F.col("t").alias("target_rank"),
-            F.col("c").alias("bucket_count"),
-            F.round(F.col("lo") / 100.0, 4).alias("bucket_lo"),
-            F.round(F.col("hi") / 100.0, 4).alias("bucket_hi"),
-            F.round(est / 100.0, 4).alias("est_price"),
-            F.round(F.col("exact_cents") / 100.0, 4).alias("exact_price"),
-            F.round(
-                (F.col("hi") - F.col("lo")).cast("double") / F.col("lo"), 6
-            ).alias("rel_bucket_width"),
-            F.col("exact_cents")
-            .between(F.col("lo"), F.col("hi"))
-            .alias("within_bucket"),
-            (
-                (F.col("hi") - F.col("lo")).cast("double") / F.col("lo")
-                <= 1.0 / _HDR_SUB
-            ).alias("width_bound_ok"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        bucketed.unpersist()
+    cents = lineitem_cents(spark, sf_dir)
+    served = serve_hdr_quantiles(spark, hdr_partial(cents), list(_HDR_PROBES))
+    return hdr_verdict(served, cents)
 
 
 @query(
@@ -3191,7 +2740,7 @@ def agg_hdr_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed AS MATERIALIZED (
         SELECT cents, half, r0, n, lvl,
                ((cents - (CAST(1 AS BIGINT) << CAST(lvl - 1 AS INT)))
-                * {_HDR_SUB})
+                * {HDR_SUB})
                    // (CAST(1 AS BIGINT) << CAST(lvl - 1 AS INT)) AS sub
         FROM lvled),
     part AS MATERIALIZED (
@@ -3249,7 +2798,7 @@ def agg_hdr_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(x.exact_cents / 100.0, 4) AS exact_price,
            x.exact_cents BETWEEN h.mlo AND h.mhi AS within_bucket,
            CAST(h.mhi - h.mlo AS DOUBLE) / h.mlo
-               <= 1.0 / {_HDR_SUB} AS width_bound_ok,
+               <= 1.0 / {HDR_SUB} AS width_bound_ok,
            l.n_buckets, l.n_mismatch,
            l.n_mismatch = 0 AS merge_exact
     FROM hit h JOIN exact x USING (p) CROSS JOIN law l
@@ -3276,126 +2825,33 @@ def agg_hdr_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hash-match DuckDB. At 100 TB: per-day histograms are "
         "O(octaves * {sub}) counter rows; the global rollup consumes "
         "sketch rows only, and this query IS that rollup plus its "
-        "proof.".format(sub=_HDR_SUB)
+        "proof.".format(sub=HDR_SUB)
     ),
 )
 def agg_hdr_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
-    w = Window.orderBy("l_extendedprice")
-    ranked = li.select(
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        (F.col("l_orderkey") % 2).alias("half"),
-        (F.row_number().over(w) - 1).cast("long").alias("r0"),
+    cents = lineitem_cents(spark, sf_dir, (F.col("l_orderkey") % 2).alias("half"))
+    part = hdr_partial(cents, "cents", batch_col="half")
+    # THE MERGE: serve_hdr_quantiles adds counters and folds bounds over
+    # the per-half sketch rows only
+    served = serve_hdr_quantiles(spark, part, list(_HDR_PROBES))
+    return (
+        hdr_verdict(served, cents)
+        .crossJoin(F.broadcast(hdr_merge_law(part, cents)))
+        .select(
+            "p",
+            "target_rank",
+            "bucket_count",
+            "bucket_lo",
+            "bucket_hi",
+            "est_price",
+            "exact_price",
+            "within_bucket",
+            "width_bound_ok",
+            "n_buckets",
+            "n_mismatch",
+            (F.col("n_mismatch") == 0).alias("merge_exact"),
+        )
     )
-    lvled = ranked.withColumn(
-        "lvl", F.length(F.conv(F.col("cents").cast("string"), 10, 2)).cast("long")
-    )
-    bucketed = lvled.withColumn(
-        "sub",
-        F.floor(
-            F.expr(
-                f"((cents - shiftleft(1L, CAST(lvl - 1 AS INT))) * {_HDR_SUB})"
-            )
-            / F.expr("shiftleft(1L, CAST(lvl - 1 AS INT))")
-        ).cast("long"),
-    ).persist()
-    try:
-        part = bucketed.groupBy("half", "lvl", "sub").agg(
-            F.count(F.lit(1)).cast("long").alias("c"),
-            F.min("cents").cast("long").alias("lo"),
-            F.max("cents").cast("long").alias("hi"),
-        )
-        # THE MERGE: counter add + bound min/max over sketch rows only
-        merged = part.groupBy("lvl", "sub").agg(
-            F.sum("c").cast("long").alias("mc"),
-            F.min("lo").cast("long").alias("mlo"),
-            F.max("hi").cast("long").alias("mhi"),
-        )
-        whole = bucketed.groupBy("lvl", "sub").agg(
-            F.count(F.lit(1)).cast("long").alias("wc"),
-            F.min("cents").cast("long").alias("wlo"),
-            F.max("cents").cast("long").alias("whi"),
-        )
-        law = (
-            merged.join(whole, ["lvl", "sub"], "full_outer")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_buckets"),
-                F.sum(
-                    F.when(
-                        ~F.col("mc").eqNullSafe(F.col("wc"))
-                        | ~F.col("mlo").eqNullSafe(F.col("wlo"))
-                        | ~F.col("mhi").eqNullSafe(F.col("whi")),
-                        1,
-                    ).otherwise(0)
-                )
-                .cast("long")
-                .alias("n_mismatch"),
-            )
-        )
-        wo = Window.orderBy("lvl", "sub")
-        cum = merged.withColumn(
-            "cw",
-            F.coalesce(
-                F.sum("mc").over(wo.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0),
-            ).cast("long"),
-        ).withColumn(
-            "mn",
-            F.sum("mc")
-            .over(
-                Window.partitionBy().rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            )
-            .cast("long"),
-        )
-        probes = tiny_df(spark, [(p,) for p in _HDR_PROBES], "p double")
-        targets = probes.crossJoin(F.broadcast(cum.select("mn").limit(1))).select(
-            "p", F.floor(F.col("p") * (F.col("mn") - 1)).cast("long").alias("t")
-        )
-        hit = targets.join(
-            F.broadcast(cum),
-            (F.col("t") >= F.col("cw")) & (F.col("t") < F.col("cw") + F.col("mc")),
-        )
-        exact = (
-            targets.withColumnRenamed("t", "r0")
-            .join(bucketed.select("r0", "cents"), "r0")
-            .select("p", F.col("cents").alias("exact_cents"))
-        )
-        est = F.col("mlo") + F.when(
-            F.col("mc") > 1,
-            (F.col("mhi") - F.col("mlo")).cast("double")
-            * (
-                (F.col("t") - F.col("cw")).cast("double")
-                / (F.col("mc") - 1).cast("double")
-            ),
-        ).otherwise(F.lit(0.0))
-        out = (
-            hit.join(exact, "p")
-            .crossJoin(F.broadcast(law))
-            .select(
-                "p",
-                F.col("t").alias("target_rank"),
-                F.col("mc").alias("bucket_count"),
-                F.round(F.col("mlo") / 100.0, 4).alias("bucket_lo"),
-                F.round(F.col("mhi") / 100.0, 4).alias("bucket_hi"),
-                F.round(est / 100.0, 4).alias("est_price"),
-                F.round(F.col("exact_cents") / 100.0, 4).alias("exact_price"),
-                F.col("exact_cents")
-                .between(F.col("mlo"), F.col("mhi"))
-                .alias("within_bucket"),
-                (
-                    (F.col("mhi") - F.col("mlo")).cast("double") / F.col("mlo")
-                    <= 1.0 / _HDR_SUB
-                ).alias("width_bound_ok"),
-                "n_buckets",
-                "n_mismatch",
-                (F.col("n_mismatch") == 0).alias("merge_exact"),
-            )
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        bucketed.unpersist()
 
 
 @query(
@@ -3465,7 +2921,7 @@ def agg_tdigest_sketch_distributed(
     bucketed = lvled.withColumn(
         "sub",
         F.floor(
-            F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {_TD_SUB})") / p
+            F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {TD_SUB})") / p
         ).cast("long"),
     )
     return bucketed.groupBy("side", "lvl", "sub").agg(

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_exporter_spark.registry import query
-from parquet_exporter_spark.tables import read_table, tiny_df
+from parquet_exporter_spark.tables import read_table, scratch_dir, tiny_df
 
 FIXTURES = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), "fixtures"
@@ -688,14 +688,9 @@ def layout_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import tempfile
-
     from parquet_exporter_spark.sinks.writers import write_orc
 
-    tag = hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"pes_orc_nation_{tag}")
+    path = scratch_dir("orc_nation", os.path.join(sf_dir, "nation*"))
     if not os.path.isdir(path):
         nation = read_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
@@ -848,17 +843,8 @@ _BLOOM_LOOKUP = _hashlib.md5(b"sess:4242").hexdigest()  # a known session id
 def _bloom_scratch_dir() -> str:
     """Versioned scratch dir for the fixture's Bloom manifest (the
     committed fixture directory stays read-only; production co-locates
-    the manifest with the data). Same mtime+size freshness key as the
-    IVF/band/rabitq scratch indexes."""
-    import glob as _glob
-    import tempfile
-
-    src_files = sorted(_glob.glob(os.path.join(HIGHCARD_SESSIONS, "*.parquet")))
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in src_files
-    ) or HIGHCARD_SESSIONS
-    tag = _hashlib.sha256(version.encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_bloomidx_{tag}")
+    the manifest with the data)."""
+    return scratch_dir("bloomidx", os.path.join(HIGHCARD_SESSIONS, "*.parquet"))
 
 
 @query(
@@ -914,19 +900,6 @@ def scan_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BLOOM_INT_LOOKUP = 4242  # a known event_id in the fixture
 
 
-def _bloom_int_scratch_dir() -> str:
-    """Separate scratch from the string index (different column)."""
-    import glob as _glob
-    import tempfile
-
-    src_files = sorted(_glob.glob(os.path.join(HIGHCARD_SESSIONS, "*.parquet")))
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in src_files
-    ) or HIGHCARD_SESSIONS
-    tag = _hashlib.sha256(("int:" + version).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_bloomint_{tag}")
-
-
 @query(
     "scan_bloom_pruned_typed",
     oracle=f"""
@@ -964,7 +937,8 @@ def scan_bloom_pruned_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import glob as _glob
 
-    scratch = _bloom_int_scratch_dir()
+    # separate scratch from the string index (different column)
+    scratch = scratch_dir("bloomint", os.path.join(HIGHCARD_SESSIONS, "*.parquet"))
     if not os.path.isfile(os.path.join(scratch, "_bloom.parquet")):
         build_bloom_manifest(
             spark, HIGHCARD_SESSIONS, "event_id", manifest_dir=scratch
@@ -1173,20 +1147,6 @@ def scan_nested_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 # deterministic functions of the orders table.
 
 
-def _timetravel_scratch_dir(sf_dir: str) -> str:
-    """Versioned scratch for the two-commit snapshot table (the
-    IVF/band/rabitq freshness contract: keyed on source mtimes+sizes)."""
-    import glob as _glob
-    import tempfile
-
-    src = sorted(_glob.glob(os.path.join(sf_dir, "orders*")))
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in src
-    ) or sf_dir
-    tag = _hashlib.sha256(("ttravel:" + version).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_ttravel_{tag}")
-
-
 def _build_timetravel_table(spark: SparkSession, sf_dir: str) -> str:
     """Two deterministic commits: v1 = orders with o_orderkey % 4 <> 3,
     v2 appends the rest. Built atomically (private temp dir + rename,
@@ -1197,7 +1157,7 @@ def _build_timetravel_table(spark: SparkSession, sf_dir: str) -> str:
 
     from parquet_exporter_spark.sinks.manifest_sink import commit_snapshot
 
-    path = _timetravel_scratch_dir(sf_dir)
+    path = scratch_dir("ttravel", os.path.join(sf_dir, "orders*"))
     if os.path.isfile(os.path.join(path, "_COMPLETE")):
         return path
     tmp = f"{path}.build-{uuid.uuid4().hex}"
@@ -1304,20 +1264,6 @@ _OPT_FILES = 8  # small files committed at v1
 _OPT_GROUPS = 3  # target_rows = n // 3 + 1 -> three compaction groups
 
 
-def _optimize_scratch_dir(sf_dir: str) -> str:
-    """Versioned scratch for the OPTIMIZE lifecycle table (same
-    freshness contract as the time-travel scratch)."""
-    import glob as _glob
-    import tempfile
-
-    src = sorted(_glob.glob(os.path.join(sf_dir, "orders*")))
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in src
-    ) or sf_dir
-    tag = _hashlib.sha256(("optcompact:" + version).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_optcompact_{tag}")
-
-
 def _build_optimize_table(spark: SparkSession, sf_dir: str) -> str:
     """The small-file problem, deterministically: v1 commits orders as
     8 range-disjoint octile files (ntile(8) over o_orderkey — exact
@@ -1336,7 +1282,7 @@ def _build_optimize_table(spark: SparkSession, sf_dir: str) -> str:
         optimize_table,
     )
 
-    path = _optimize_scratch_dir(sf_dir)
+    path = scratch_dir("optcompact", os.path.join(sf_dir, "orders*"))
     if os.path.isfile(os.path.join(path, "_COMPLETE")):
         return path
     tmp = f"{path}.build-{uuid.uuid4().hex}"
@@ -1518,17 +1464,8 @@ _ZM_VAL = (20.0, 120.0)
 
 def _zonemap_scratch_dir(sf_dir: str) -> str:
     """Hilbert-clustered events copy + its zonemap, keyed by source data
-    version (the bloom/IVF scratch-index pattern)."""
-    import glob as _glob
-    import tempfile
-
-    src = os.path.join(sf_dir, "events.parquet")
-    files = sorted(_glob.glob(src)) or [src]
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in files
-    )
-    tag = _hashlib.sha256(("zonemap:" + version).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_zonemap_{tag}")
+    version."""
+    return scratch_dir("zonemap", os.path.join(sf_dir, "events.parquet"))
 
 
 @query(
@@ -1594,22 +1531,6 @@ def scan_zonemap_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _zonemap_dist_scratch_dir() -> str:
-    """Versioned scratch dir for the ranged-events fixture's distributed
-    zonemap (the fixture directory is committed read-only; production
-    co-locates the zonemap with the data). Same mtime+size freshness key
-    as the bloom/IVF scratch indexes."""
-    import glob as _glob
-    import tempfile
-
-    src_files = sorted(_glob.glob(os.path.join(RANGED_EVENTS, "*.parquet")))
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in src_files
-    ) or RANGED_EVENTS
-    tag = _hashlib.sha256(("zmdist:" + version).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_zmdist_{tag}")
-
-
 @query(
     "scan_zonemap_distributed",
     oracle=f"""
@@ -1663,7 +1584,7 @@ def scan_zonemap_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_zonemap_distributed,
     )
 
-    scratch = _zonemap_dist_scratch_dir()
+    scratch = scratch_dir("zmdist", os.path.join(RANGED_EVENTS, "*.parquet"))
     man = os.path.join(scratch, ZONEMAP_NAME)
     if not os.path.isfile(man):
         os.makedirs(scratch, exist_ok=True)

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from parquet_exporter_spark.operators.asof import asof_join, asof_join_nearest
 from parquet_exporter_spark.queries._util import rmoney
 from parquet_exporter_spark.registry import query
-from parquet_exporter_spark.tables import read_table, tiny_df
+from parquet_exporter_spark.tables import read_table, scratch_dir, tiny_df
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -667,20 +667,10 @@ def _bucketed_table(spark: SparkSession, sf_dir: str, name: str, key: str, n_buc
     test workers) are tolerated: losing a saveAsTable race falls back to
     the winner's table; a catalog entry whose scratch path was wiped is
     dropped and rebuilt."""
-    import glob
-    import hashlib
     import os
-    import tempfile
 
-    # Sub-second mtime plus size: data regenerated within the same second
-    # as the previous generation must still produce a fresh tag.
-    src_files = sorted(glob.glob(os.path.join(sf_dir, name + "*")))
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in src_files
-    ) or sf_dir
-    tag = hashlib.sha256(f"{sf_dir}|{version}".encode()).hexdigest()[:12]
-    tbl = f"pes_bkt_{name}_{tag}"
-    path = os.path.join(tempfile.gettempdir(), tbl)
+    path = scratch_dir(f"bkt_{name}", os.path.join(sf_dir, name + "*"))
+    tbl = os.path.basename(path)
     if spark.catalog.tableExists(tbl) and not os.path.isdir(path):
         # Catalog survived (e.g. shared derby metastore) but the scratch
         # files did not: rebuild instead of failing at scan time.

@@ -8,6 +8,8 @@ are rows-only here and property-tested in tests/test_llm.py.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -16,7 +18,7 @@ from parquet_exporter_spark.functions import similarity as S
 from parquet_exporter_spark.functions import text as T
 from parquet_exporter_spark.registry import query
 from parquet_exporter_spark import tables
-from parquet_exporter_spark.tables import read_table, tiny_df
+from parquet_exporter_spark.tables import read_table, scratch_dir, tiny_df
 
 
 # ---------------------------------------------------------------- dedup
@@ -368,21 +370,8 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_scratch_path(sf_dir: str) -> str:
-    """Versioned scratch path for the persisted incremental IVF index
-    (same freshness contract as the band-index scratch: keyed on source
-    file mtimes+sizes so regenerated testdata never reuses a stale
-    index)."""
-    import glob
-    import hashlib
-    import os
-    import tempfile
-
-    src = sorted(glob.glob(os.path.join(sf_dir, "embeddings*")))
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in src
-    ) or sf_dir
-    tag = hashlib.sha256(f"{sf_dir}|{version}".encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_ivf_inc_{tag}")
+    """Versioned scratch path for the persisted incremental IVF index."""
+    return scratch_dir("ivf_inc", os.path.join(sf_dir, "embeddings*"))
 
 
 @query(
@@ -1206,21 +1195,8 @@ def dedup_minhash_lsh_pairs_portable(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 def _incremental_index_path(sf_dir: str) -> str:
-    """Versioned scratch path for the corpus band index (same freshness
-    contract as the bucketed-join scratch tables: keyed on source dir +
-    file mtimes+sizes, so regenerated testdata never reuses a stale
-    index)."""
-    import glob
-    import hashlib
-    import os
-    import tempfile
-
-    src = sorted(glob.glob(os.path.join(sf_dir, "documents*")))
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in src
-    ) or sf_dir
-    tag = hashlib.sha256(f"{sf_dir}|{version}".encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_mh_index_{tag}")
+    """Versioned scratch path for the corpus band index."""
+    return scratch_dir("mh_index", os.path.join(sf_dir, "documents*"))
 
 
 @query(

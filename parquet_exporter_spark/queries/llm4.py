@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_exporter_spark.functions import text as T
+from parquet_exporter_spark.operators.pq import nearest_centroid
 from parquet_exporter_spark.registry import query
 from parquet_exporter_spark.tables import read_table
 
@@ -439,27 +440,9 @@ def emb_kmeans_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     init = emb.orderBy("vec_id").limit(_KM_K).collect()
     cents = [list(r.x) for r in init]  # cid = position (vec_id ascending)
 
-    def dist_to(c: list[float]):
-        carr = F.array(*[F.lit(v) for v in c])
-        return F.round(
-            F.aggregate(
-                F.zip_with(F.col("x"), carr, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            9,
-        )
-
     assigned = None
     for it in range(_KM_ITERS):
-        dists = [dist_to(c) for c in cents]
-        m = F.least(*dists)
-        cluster = F.lit(_KM_K - 1)
-        for cid in range(_KM_K - 2, -1, -1):
-            cluster = F.when(dists[cid] == m, F.lit(cid)).otherwise(cluster)
-        assigned = emb.select(
-            "vec_id", "x", cluster.alias("cluster"), m.alias("dist")
-        )
+        assigned = nearest_centroid(emb, cents)
         if it < _KM_ITERS - 1:
             rows = (
                 assigned.select("cluster", F.posexplode("x").alias("i", "v"))
@@ -473,9 +456,7 @@ def emb_kmeans_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
             cents = [
                 [by_cid[cid][i] for i in range(_KM_DIM)] for cid in range(_KM_K)
             ]
-    return assigned.select(
-        "vec_id", F.col("cluster").cast("int").alias("cluster"), "dist"
-    )
+    return assigned.drop("x")
 
 
 _BG_K = 0.5  # add-k smoothing

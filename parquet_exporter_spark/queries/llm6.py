@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from parquet_exporter_spark.functions import similarity as S
 from parquet_exporter_spark.functions import text as T
+from parquet_exporter_spark.operators.pq import nearest_centroid
 from parquet_exporter_spark.registry import query
 from parquet_exporter_spark.tables import read_table
 
@@ -224,23 +225,7 @@ def dedup_semdedup_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = emb.orderBy("vec_id").limit(SEMDEDUP_K).collect()
     cents = [list(r.x) for r in seeds]  # cid = position (vec_id ascending)
 
-    def dist_to(c: list[float]):
-        carr = F.array(*[F.lit(v) for v in c])
-        return F.round(
-            F.aggregate(
-                F.zip_with(F.col("x"), carr, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            9,
-        )
-
-    dists = [dist_to(c) for c in cents]
-    m = F.least(*dists)
-    cluster = F.lit(SEMDEDUP_K - 1)
-    for cid in range(SEMDEDUP_K - 2, -1, -1):
-        cluster = F.when(dists[cid] == m, F.lit(cid)).otherwise(cluster)
-    assigned = emb.select("vec_id", "x", cluster.cast("int").alias("cluster"))
+    assigned = nearest_centroid(emb, cents)
 
     # norms attach per ROW before the within-cluster pair join — cosine()
     # per pair would re-derive both norms, tripling the interpreted-HOF
@@ -752,23 +737,7 @@ def sample_semantic_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = emb.orderBy("vec_id").limit(SEMDEDUP_K).collect()
     cents = [list(r.x) for r in seeds]
 
-    def dist_to(c: list[float]):
-        carr = F.array(*[F.lit(v) for v in c])
-        return F.round(
-            F.aggregate(
-                F.zip_with(F.col("x"), carr, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            9,
-        )
-
-    dists = [dist_to(c) for c in cents]
-    m = F.least(*dists)
-    cluster = F.lit(SEMDEDUP_K - 1)
-    for cid in range(SEMDEDUP_K - 2, -1, -1):
-        cluster = F.when(dists[cid] == m, F.lit(cid)).otherwise(cluster)
-    assigned = emb.select("vec_id", cluster.cast("int").alias("cluster"))
+    assigned = nearest_centroid(emb, cents)
     w = Window.partitionBy("cluster").orderBy(
         F.md5(F.col("vec_id").cast("string")), "vec_id"
     )

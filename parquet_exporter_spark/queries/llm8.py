@@ -21,12 +21,13 @@ inventory.
 from __future__ import annotations
 
 import hashlib
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parquet_exporter_spark.registry import query
-from parquet_exporter_spark.tables import read_table
+from parquet_exporter_spark.tables import read_table, scratch_dir
 
 # Row-pattern: "a view, then AT LEAST TWO clicks, then a purchase, with
 # any amount of signup/error noise between the stages" — three pattern
@@ -452,20 +453,8 @@ def similarity_rabitq_fast_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rbq_scratch_path(sf_dir: str) -> str:
-    """Versioned scratch path for the persisted RaBitQ signature index
-    (the IVF/band-index freshness contract: keyed on source file
-    mtimes+sizes so regenerated testdata never reuses a stale index)."""
-    import glob
-    import hashlib
-    import os
-    import tempfile
-
-    src = sorted(glob.glob(os.path.join(sf_dir, "embeddings*")))
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in src
-    ) or sf_dir
-    tag = hashlib.sha256(f"{sf_dir}|{version}".encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_rbq_sig_{tag}")
+    """Versioned scratch path for the persisted RaBitQ signature index."""
+    return scratch_dir("rbq_sig", os.path.join(sf_dir, "embeddings*"))
 
 
 @query(

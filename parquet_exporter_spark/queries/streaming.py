@@ -13,8 +13,57 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parquet_exporter_spark.queries._util import (
+    distinct_verdict,
+    hdr_merge_law,
+    hdr_verdict,
+    lineitem_cents,
+    tdigest_verdict,
+    true_distinct,
+)
 from parquet_exporter_spark.registry import query
-from parquet_exporter_spark.tables import read_table, tiny_df
+from parquet_exporter_spark.streaming.cms_ingest import (
+    CMS_D,
+    CMS_W,
+    cms_partial,
+    merge_cms,
+    read_cms_counters,
+    serve_cms_estimates,
+)
+from parquet_exporter_spark.streaming.hdr_ingest import (
+    HDR_SUB,
+    hdr_partial,
+    read_hdr_buckets,
+    serve_hdr_quantiles,
+)
+from parquet_exporter_spark.streaming.hll_ingest import (
+    HLL_HEX,
+    HLL_LC_CUT,
+    HLL_M,
+    HLL_NUM,
+    HLL_REM,
+    HLL_RMAX,
+    hll_partial,
+    merge_hll,
+    read_hll_registers,
+    serve_hll_estimate,
+)
+from parquet_exporter_spark.streaming.kmv_ingest import (
+    KMV_HEX,
+    KMV_K,
+    KMV_SPACE,
+    kmv_partial,
+    read_kmv_hashes,
+    serve_kmv_estimate,
+)
+from parquet_exporter_spark.streaming.partial_store import commit_partials_batched
+from parquet_exporter_spark.streaming.tdigest_ingest import (
+    TD_SUB,
+    read_tdigest_centroids,
+    serve_tdigest_quantiles,
+    tdigest_partial,
+)
+from parquet_exporter_spark.tables import read_table, scratch_dir, tiny_df
 
 
 @query(
@@ -1315,20 +1364,6 @@ _STD_PROBES = (0.01, 0.25, 0.5, 0.9, 0.99)
 _STD_PARTS = 3
 
 
-def _tdigest_stream_scratch(sf_dir: str) -> str:
-    import glob as _glob
-    import hashlib as _hl
-    import tempfile
-
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    files = sorted(_glob.glob(src)) or [src]
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in files
-    )
-    tag = _hl.sha256(("stdigest:" + version).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_stdigest_{tag}")
-
-
 def _td_part_centroids_sql(parts: int) -> str:
     """Per-micro-batch t-digest builds as SQL — the agg_tdigest_merged
     half-centroid recipe generalized to ``parts`` batches keyed by
@@ -1355,7 +1390,7 @@ def _td_part_centroids_sql(parts: int) -> str:
         FROM keyed),
     bucketed AS (
         SELECT cents, batch_id, side, lvl,
-               ((dd - (CAST(1 AS BIGINT) << CAST(lvl AS INT))) * 4)
+               ((dd - (CAST(1 AS BIGINT) << CAST(lvl AS INT))) * {TD_SUB})
                    // (CAST(1 AS BIGINT) << CAST(lvl AS INT)) AS sub
         FROM lvled),
     cent AS MATERIALIZED (
@@ -1392,7 +1427,7 @@ def _td_part_centroids_sql(parts: int) -> str:
         FROM resided),
     mbucket AS (
         SELECT *,
-               ((dd2 - (CAST(1 AS BIGINT) << CAST(lvl2 AS INT))) * 4)
+               ((dd2 - (CAST(1 AS BIGINT) << CAST(lvl2 AS INT))) * {TD_SUB})
                    // (CAST(1 AS BIGINT) << CAST(lvl2 AS INT)) AS sub2
         FROM relvled),
     mcent AS MATERIALIZED (
@@ -1475,108 +1510,31 @@ def _td_part_centroids_sql(parts: int) -> str:
     ),
 )
 def stream_tdigest_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from parquet_exporter_spark.streaming.partial_store import (
-        commit_partials_batched,
+    store = scratch_dir("stdigest", os.path.join(sf_dir, "lineitem.parquet"))
+    cents = lineitem_cents(
+        spark, sf_dir, (F.col("l_orderkey") % _STD_PARTS).alias("batch")
     )
-    from parquet_exporter_spark.streaming.tdigest_ingest import (
-        committed_batches,
-        read_tdigest_centroids,
-        serve_tdigest_quantiles,
-        tdigest_partial,
+    # Optimization r15 (VERDICT item 4): ONE-JOB batched bootstrap of
+    # every still-missing partial — the per-batch rank windows run
+    # partitioned by batch in a single pass — instead of one sequential
+    # job (scan + single-partition window + write) per micro-batch. Same
+    # partial rows, same marker protocol; a no-op without any Spark job
+    # once every marker exists. The foreachBatch handler
+    # (tdigest_apply_batch) remains the real streaming path.
+    commit_partials_batched(
+        tdigest_partial(cents, "cents", batch_col="batch"),
+        list(range(_STD_PARTS)),
+        store,
+        "batch",
     )
-
-    store = _tdigest_stream_scratch(sf_dir)
-    li = read_table(spark, sf_dir, "lineitem")
-    cents = li.select(
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        (F.col("l_orderkey") % _STD_PARTS).alias("batch"),
-    )
-    if len(committed_batches(store)) < _STD_PARTS:
-        # Optimization r15 (VERDICT item 4): ONE-JOB batched bootstrap of
-        # every still-missing partial — the per-batch rank windows run
-        # partitioned by batch in a single pass — instead of one
-        # sequential job (scan + single-partition window + write) per
-        # micro-batch. Same partial rows, same marker protocol; the
-        # foreachBatch handler (tdigest_apply_batch) remains the real
-        # streaming path.
-        commit_partials_batched(
-            tdigest_partial(cents, "cents", batch_col="batch"),
-            list(range(_STD_PARTS)),
-            store,
-            "batch",
-        )
     cent = read_tdigest_centroids(spark, store)
     served = serve_tdigest_quantiles(spark, cent, list(_STD_PROBES))
-    wg = Window.orderBy("cents")
-    gr = cents.select(
-        "cents", (F.row_number().over(wg) - 1).cast("long").alias("r0g")
-    )
-    exact = (
-        served.select("p", F.col("t").alias("r0g"))
-        .join(gr, "r0g")
-        .select("p", F.col("cents").alias("exact_cents"))
-    )
-    ranks = (
-        gr.crossJoin(F.broadcast(served.select("p", "est_cents")))
-        .groupBy("p")
-        .agg(
-            F.sum(F.when(F.col("cents") < F.col("est_cents"), 1).otherwise(0))
-            .cast("long")
-            .alias("lt"),
-            F.sum(F.when(F.col("cents") <= F.col("est_cents"), 1).otherwise(0))
-            .cast("long")
-            .alias("le"),
-        )
-    )
-    rank_err = (
-        F.when(F.col("lt") > F.col("t"), F.col("lt") - F.col("t"))
-        .when(F.col("le") - 1 < F.col("t"), F.col("t") - (F.col("le") - 1))
-        .otherwise(F.lit(0))
-        .cast("long")
-    )
-    d_tail = (
-        F.when(F.col("t") + 1 < F.col("n") - F.col("t"), F.col("t") + 1)
-        .otherwise(F.col("n") - F.col("t"))
-        .cast("long")
-    )
-    return (
-        served.join(exact, "p")
-        .join(ranks, "p")
-        .select(
-            "p",
-            F.col("t").alias("target_rank"),
-            F.col("weight").alias("merged_weight"),
-            "n_inputs",
-            F.lit(_STD_PARTS).cast("long").alias("n_batches"),
-            F.round(F.col("est_cents") / 100.0, 4).alias("est_price"),
-            F.round(F.col("exact_cents") / 100.0, 4).alias("exact_price"),
-            rank_err.alias("rank_err"),
-            d_tail.alias("d_tail"),
-            (rank_err.cast("double") <= 0.35 * d_tail + 8).alias("within_bound"),
-        )
+    return tdigest_verdict(
+        served, cents, F.lit(_STD_PARTS).cast("long").alias("n_batches")
     )
 
 
 _SHLL_PARTS = 3
-_SHLL_ALPHA = 0.7213 / (1.0 + 1.079 / 512)
-_SHLL_NUM = _SHLL_ALPHA * float(512) * float(512) * float(1 << 52)
-_SHLL_LC_CUT = 2.5 * 512
-
-
-def _hll_stream_scratch(sf_dir: str) -> str:
-    import glob as _glob
-    import hashlib as _hl
-    import tempfile
-
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    files = sorted(_glob.glob(src)) or [src]
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in files
-    )
-    tag = _hl.sha256(("shll:" + version).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_shll_{tag}")
 
 
 @query(
@@ -1585,12 +1543,12 @@ def _hll_stream_scratch(sf_dir: str) -> str:
     WITH h AS MATERIALIZED (
         SELECT l_orderkey % {_SHLL_PARTS} AS batch_id,
                ('0x' || substring(md5(CAST(l_partkey AS VARCHAR)),
-                                  1, 15))::BIGINT AS hv
+                                  1, {HLL_HEX}))::BIGINT AS hv
         FROM lineitem),
     rho AS (
-        SELECT batch_id, hv // {1 << 51} AS bucket,
-               CASE WHEN hv % {1 << 51} = 0 THEN 52
-                    ELSE 51 + 1 - length(format('{{:b}}', hv % {1 << 51}))
+        SELECT batch_id, hv // {1 << HLL_REM} AS bucket,
+               CASE WHEN hv % {1 << HLL_REM} = 0 THEN {HLL_RMAX}
+                    ELSE {HLL_REM} + 1 - length(format('{{:b}}', hv % {1 << HLL_REM}))
                END AS rho
         FROM h),
     part AS MATERIALIZED (
@@ -1606,23 +1564,25 @@ def _hll_stream_scratch(sf_dir: str) -> str:
         FROM merged m FULL OUTER JOIN whole w USING (bucket)),
     state AS (
         SELECT CAST(count(*) AS BIGINT) AS n_nonempty,
-               CAST(512 - count(*) AS BIGINT) AS v_empty,
-               CAST(sum(CAST(1 AS BIGINT) << CAST(52 - r AS INT))
-                    + (512 - count(*)) * (CAST(1 AS BIGINT) << 52) AS BIGINT)
+               CAST({HLL_M} - count(*) AS BIGINT) AS v_empty,
+               CAST(sum(CAST(1 AS BIGINT) << CAST({HLL_RMAX} - r AS INT))
+                    + ({HLL_M} - count(*))
+                      * (CAST(1 AS BIGINT) << {HLL_RMAX}) AS BIGINT)
                    AS s_scaled
         FROM merged),
     est AS (
         SELECT n_nonempty, v_empty, s_scaled,
-               CAST(CASE WHEN {_SHLL_NUM!r} / CAST(s_scaled AS DOUBLE)
-                              <= {_SHLL_LC_CUT!r} AND v_empty > 0
-                    THEN round(512.0 * ln(512.0 / CAST(v_empty AS DOUBLE)))
-                    ELSE round({_SHLL_NUM!r} / CAST(s_scaled AS DOUBLE))
+               CAST(CASE WHEN {HLL_NUM!r} / CAST(s_scaled AS DOUBLE)
+                              <= {HLL_LC_CUT!r} AND v_empty > 0
+                    THEN round({float(HLL_M)!r}
+                               * ln({float(HLL_M)!r} / CAST(v_empty AS DOUBLE)))
+                    ELSE round({HLL_NUM!r} / CAST(s_scaled AS DOUBLE))
                     END AS BIGINT) AS est_distinct
         FROM state),
     truth AS (
         SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) AS true_distinct
         FROM lineitem)
-    SELECT CAST(512 AS BIGINT) AS m, CAST({_SHLL_PARTS} AS BIGINT) AS n_batches,
+    SELECT CAST({HLL_M} AS BIGINT) AS m, CAST({_SHLL_PARTS} AS BIGINT) AS n_batches,
            e.n_nonempty, e.v_empty, e.s_scaled, e.est_distinct,
            t.true_distinct,
            round(abs(CAST(e.est_distinct AS DOUBLE) - t.true_distinct)
@@ -1657,31 +1617,18 @@ def _hll_stream_scratch(sf_dir: str) -> str:
     ),
 )
 def stream_hll_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from parquet_exporter_spark.streaming.hll_ingest import (
-        committed_batches,
-        hll_partial,
-        merge_hll,
-        read_hll_registers,
-        serve_hll_estimate,
-    )
-    from parquet_exporter_spark.streaming.partial_store import (
-        commit_partials_batched,
-    )
-
-    store = _hll_stream_scratch(sf_dir)
+    store = scratch_dir("shll", os.path.join(sf_dir, "lineitem.parquet"))
     li = read_table(spark, sf_dir, "lineitem")
     keyed = li.select(
         "l_partkey", (F.col("l_orderkey") % _SHLL_PARTS).alias("batch")
     )
-    if len(committed_batches(store)) < _SHLL_PARTS:
-        # Optimization r15 (VERDICT item 4): one-job batched bootstrap —
-        # see stream_tdigest_twin.
-        commit_partials_batched(
-            hll_partial(keyed, "l_partkey", batch_col="batch"),
-            list(range(_SHLL_PARTS)),
-            store,
-            "batch",
-        )
+    # one-job batched bootstrap — see stream_tdigest_twin
+    commit_partials_batched(
+        hll_partial(keyed, "l_partkey", batch_col="batch"),
+        list(range(_SHLL_PARTS)),
+        store,
+        "batch",
+    )
     regs = read_hll_registers(spark, store)
     served = serve_hll_estimate(spark, regs)
     whole = hll_partial(li.select("l_partkey"), "l_partkey").withColumnRenamed(
@@ -1698,11 +1645,8 @@ def stream_hll_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_register_mismatch")
         )
     )
-    truth = li.agg(
-        F.countDistinct("l_partkey").cast("long").alias("true_distinct")
-    )
     return (
-        served.crossJoin(F.broadcast(truth))
+        served.crossJoin(F.broadcast(true_distinct(li, "l_partkey")))
         .crossJoin(F.broadcast(law))
         .select(
             "m",
@@ -1712,21 +1656,7 @@ def stream_hll_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_scaled",
             "est_distinct",
             "true_distinct",
-            F.round(
-                F.abs(
-                    F.col("est_distinct").cast("double")
-                    - F.col("true_distinct")
-                )
-                / F.col("true_distinct"),
-                6,
-            ).alias("rel_error"),
-            (
-                F.abs(
-                    F.col("est_distinct").cast("double")
-                    - F.col("true_distinct")
-                )
-                <= 0.15 * F.col("true_distinct") + 1
-            ).alias("within_bound"),
+            *distinct_verdict(0.15),
             "n_register_mismatch",
             (F.col("n_register_mismatch") == 0).alias("merge_exact"),
         )
@@ -1735,20 +1665,6 @@ def stream_hll_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SHDR_PARTS = 3
 _SHDR_PROBES = (0.5, 0.99)
-
-
-def _hdr_stream_scratch(sf_dir: str) -> str:
-    import glob as _glob
-    import hashlib as _hl
-    import tempfile
-
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    files = sorted(_glob.glob(src)) or [src]
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in files
-    )
-    tag = _hl.sha256(("shdr:" + version).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_shdr_{tag}")
 
 
 @query(
@@ -1766,7 +1682,7 @@ def _hdr_stream_scratch(sf_dir: str) -> str:
         FROM ranked),
     bucketed AS MATERIALIZED (
         SELECT cents, batch_id, r0, lvl,
-               ((cents - (CAST(1 AS BIGINT) << CAST(lvl - 1 AS INT))) * 8)
+               ((cents - (CAST(1 AS BIGINT) << CAST(lvl - 1 AS INT))) * {HDR_SUB})
                    // (CAST(1 AS BIGINT) << CAST(lvl - 1 AS INT)) AS sub
         FROM lvled),
     part AS MATERIALIZED (
@@ -1820,7 +1736,7 @@ def _hdr_stream_scratch(sf_dir: str) -> str:
                          ELSE 0.0 END) / 100.0, 4) AS est_price,
            round(x.exact_cents / 100.0, 4) AS exact_price,
            x.exact_cents BETWEEN h.lo AND h.hi AS within_bucket,
-           CAST(h.hi - h.lo AS DOUBLE) / h.lo <= 0.125 AS width_bound_ok,
+           CAST(h.hi - h.lo AS DOUBLE) / h.lo <= {1.0 / HDR_SUB!r} AS width_bound_ok,
            l.n_buckets, l.n_mismatch, l.n_mismatch = 0 AS merge_exact
     FROM hit h JOIN exact x USING (p) CROSS JOIN law l
     """,
@@ -1850,87 +1766,33 @@ def _hdr_stream_scratch(sf_dir: str) -> str:
     ),
 )
 def stream_hdr_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from parquet_exporter_spark.streaming.hdr_ingest import (
-        committed_batches,
-        hdr_partial,
-        merge_hdr,
-        read_hdr_buckets,
-        serve_hdr_quantiles,
+    store = scratch_dir("shdr", os.path.join(sf_dir, "lineitem.parquet"))
+    cents = lineitem_cents(
+        spark, sf_dir, (F.col("l_orderkey") % _SHDR_PARTS).alias("batch")
     )
-    from parquet_exporter_spark.streaming.partial_store import (
-        commit_partials_batched,
+    # one-job batched bootstrap — see stream_tdigest_twin
+    commit_partials_batched(
+        hdr_partial(cents, "cents", batch_col="batch"),
+        list(range(_SHDR_PARTS)),
+        store,
+        "batch",
     )
-
-    store = _hdr_stream_scratch(sf_dir)
-    li = read_table(spark, sf_dir, "lineitem")
-    cents = li.select(
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        (F.col("l_orderkey") % _SHDR_PARTS).alias("batch"),
-    )
-    if len(committed_batches(store)) < _SHDR_PARTS:
-        # Optimization r15 (VERDICT item 4): one-job batched bootstrap —
-        # see stream_tdigest_twin.
-        commit_partials_batched(
-            hdr_partial(cents, "cents", batch_col="batch"),
-            list(range(_SHDR_PARTS)),
-            store,
-            "batch",
-        )
     buckets = read_hdr_buckets(spark, store)
     served = serve_hdr_quantiles(spark, buckets, list(_SHDR_PROBES))
-    whole = (
-        hdr_partial(cents.select("cents"))
-        .withColumnRenamed("c", "wc")
-        .withColumnRenamed("lo", "wlo")
-        .withColumnRenamed("hi", "whi")
-    )
-    law = (
-        merge_hdr(buckets)
-        .join(whole, ["lvl", "sub"], "full_outer")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_buckets"),
-            F.sum(
-                F.when(
-                    ~F.col("c").eqNullSafe(F.col("wc"))
-                    | ~F.col("lo").eqNullSafe(F.col("wlo"))
-                    | ~F.col("hi").eqNullSafe(F.col("whi")),
-                    1,
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_mismatch"),
-        )
-    )
-    wg = Window.orderBy("cents")
-    gr = cents.select(
-        "cents", (F.row_number().over(wg) - 1).cast("long").alias("r0")
-    )
-    exact = (
-        served.select("p", F.col("t").alias("r0"))
-        .join(gr, "r0")
-        .select("p", F.col("cents").alias("exact_cents"))
-    )
     return (
-        served.join(exact, "p")
-        .crossJoin(F.broadcast(law))
+        hdr_verdict(served, cents)
+        .crossJoin(F.broadcast(hdr_merge_law(buckets, cents)))
         .select(
             "p",
-            F.col("t").alias("target_rank"),
-            F.col("c").alias("bucket_count"),
+            "target_rank",
+            "bucket_count",
             F.lit(_SHDR_PARTS).cast("long").alias("n_batches"),
-            F.round(F.col("lo") / 100.0, 4).alias("bucket_lo"),
-            F.round(F.col("hi") / 100.0, 4).alias("bucket_hi"),
-            F.round(F.col("est_cents") / 100.0, 4).alias("est_price"),
-            F.round(F.col("exact_cents") / 100.0, 4).alias("exact_price"),
-            F.col("exact_cents")
-            .between(F.col("lo"), F.col("hi"))
-            .alias("within_bucket"),
-            (
-                (F.col("hi") - F.col("lo")).cast("double") / F.col("lo")
-                <= 0.125
-            ).alias("width_bound_ok"),
+            "bucket_lo",
+            "bucket_hi",
+            "est_price",
+            "exact_price",
+            "within_bucket",
+            "width_bound_ok",
             "n_buckets",
             "n_mismatch",
             (F.col("n_mismatch") == 0).alias("merge_exact"),
@@ -1949,24 +1811,10 @@ _SCMS_PARTS = 3
 _SCMS_PROBES = (1, 2, 7, 13)
 
 
-def _cms_stream_scratch(sf_dir: str) -> str:
-    import glob as _glob
-    import hashlib as _hl
-    import tempfile
-
-    src = os.path.join(sf_dir, "orders.parquet")
-    files = sorted(_glob.glob(src)) or [src]
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in files
-    )
-    tag = _hl.sha256(("scms:" + version).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_scms_{tag}")
-
-
 def _scms_oracle() -> str:
     from parquet_exporter_spark.functions import dedup as _D
 
-    coeffs = _D.hash_coefficients(4)
+    coeffs = _D.hash_coefficients(CMS_D)
     seeds = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(coeffs))
     bh = _D.sql_base_hash_31("CAST(o_custkey AS VARCHAR)")
     bhp = _D.sql_base_hash_31("CAST(p.key AS VARCHAR)")
@@ -1977,7 +1825,7 @@ def _scms_oracle() -> str:
         FROM orders),
     buck AS MATERIALIZED (
         SELECT batch_id, seed AS depth,
-               ((a * h + b) % {_D.MERSENNE_31}) % 64 AS bucket
+               ((a * h + b) % {_D.MERSENNE_31}) % {CMS_W} AS bucket
         FROM h CROSS JOIN (VALUES {seeds}) AS t(seed, a, b)),
     part AS MATERIALIZED (
         SELECT batch_id, depth, bucket, CAST(count(*) AS BIGINT) AS c
@@ -1996,7 +1844,7 @@ def _scms_oracle() -> str:
     pk AS (SELECT * FROM (VALUES {probes}) AS t(key)),
     pb AS (
         SELECT p.key, t.seed AS depth,
-               ((t.a * {bhp} + t.b) % {_D.MERSENNE_31}) % 64 AS bucket
+               ((t.a * {bhp} + t.b) % {_D.MERSENNE_31}) % {CMS_W} AS bucket
         FROM pk p CROSS JOIN (VALUES {seeds}) AS t(seed, a, b)),
     est AS (
         SELECT pb.key,
@@ -2043,31 +1891,18 @@ def _scms_oracle() -> str:
     ),
 )
 def stream_cms_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from parquet_exporter_spark.streaming.cms_ingest import (
-        cms_partial,
-        committed_batches,
-        merge_cms,
-        read_cms_counters,
-        serve_cms_estimates,
-    )
-    from parquet_exporter_spark.streaming.partial_store import (
-        commit_partials_batched,
-    )
-
-    store = _cms_stream_scratch(sf_dir)
+    store = scratch_dir("scms", os.path.join(sf_dir, "orders.parquet"))
     orders = read_table(spark, sf_dir, "orders")
     keyed = orders.select(
         "o_custkey", (F.col("o_orderkey") % _SCMS_PARTS).alias("batch")
     )
-    if len(committed_batches(store)) < _SCMS_PARTS:
-        # Optimization r15 (VERDICT item 4): one-job batched bootstrap —
-        # see stream_tdigest_twin.
-        commit_partials_batched(
-            cms_partial(keyed, "o_custkey", batch_col="batch"),
-            list(range(_SCMS_PARTS)),
-            store,
-            "batch",
-        )
+    # one-job batched bootstrap — see stream_tdigest_twin
+    commit_partials_batched(
+        cms_partial(keyed, "o_custkey", batch_col="batch"),
+        list(range(_SCMS_PARTS)),
+        store,
+        "batch",
+    )
     counters = read_cms_counters(spark, store)
     est = serve_cms_estimates(
         spark, counters, [str(k) for k in _SCMS_PROBES]
@@ -2118,65 +1953,51 @@ def stream_cms_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SKMV_PARTS = 3
 
 
-def _kmv_stream_scratch(sf_dir: str) -> str:
-    import glob as _glob
-    import hashlib as _hl
-    import tempfile
-
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    files = sorted(_glob.glob(src)) or [src]
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in files
-    )
-    tag = _hl.sha256(("skmv:" + version).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_skmv_{tag}")
-
-
 @query(
     "stream_kmv_twin",
     oracle=f"""
     WITH h AS MATERIALIZED (
         SELECT DISTINCT l_orderkey % {_SKMV_PARTS} AS batch_id,
                ('0x' || substring(md5(CAST(l_partkey AS VARCHAR)),
-                                  1, 15))::BIGINT AS hv
+                                  1, {KMV_HEX}))::BIGINT AS hv
         FROM lineitem),
     part_topk AS MATERIALIZED (
         SELECT batch_id, hv,
                row_number() OVER (PARTITION BY batch_id ORDER BY hv) AS rk
-        FROM h QUALIFY rk <= 128),
+        FROM h QUALIFY rk <= {KMV_K}),
     merged AS (
         SELECT hv, row_number() OVER (ORDER BY hv) AS rk
         FROM (SELECT DISTINCT hv FROM part_topk)
-        QUALIFY rk <= 128),
+        QUALIFY rk <= {KMV_K}),
     mstats AS (
         SELECT CAST(count(*) AS BIGINT) AS n_kept,
-               CAST(max(CASE WHEN rk = 128 THEN hv END) AS BIGINT) AS kth
+               CAST(max(CASE WHEN rk = {KMV_K} THEN hv END) AS BIGINT) AS kth
         FROM merged),
     whole AS (
         SELECT hv, row_number() OVER (ORDER BY hv) AS rk
         FROM (SELECT DISTINCT hv FROM h)
-        QUALIFY rk <= 128),
+        QUALIFY rk <= {KMV_K}),
     wstats AS (
-        SELECT CAST(max(CASE WHEN rk = 128 THEN hv END) AS BIGINT) AS kth_whole
+        SELECT CAST(max(CASE WHEN rk = {KMV_K} THEN hv END) AS BIGINT) AS kth_whole
         FROM whole),
     truth AS (
         SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) AS true_distinct
         FROM lineitem)
-    SELECT CAST(128 AS BIGINT) AS k, CAST({_SKMV_PARTS} AS BIGINT) AS n_batches,
+    SELECT CAST({KMV_K} AS BIGINT) AS k, CAST({_SKMV_PARTS} AS BIGINT) AS n_batches,
            m.n_kept, m.kth AS kth_merged, w.kth_whole,
            m.kth IS NOT DISTINCT FROM w.kth_whole AS merge_exact,
            CAST(CASE WHEN m.kth IS NULL THEN m.n_kept
-                ELSE CAST(round(127 * {float(1 << 60)!r}
+                ELSE CAST(round({KMV_K - 1} * {KMV_SPACE!r}
                                 / CAST(m.kth AS DOUBLE)) AS BIGINT)
                 END AS BIGINT) AS est_distinct,
            t.true_distinct,
            round(abs(CAST(CASE WHEN m.kth IS NULL THEN m.n_kept
-                     ELSE CAST(round(127 * {float(1 << 60)!r}
+                     ELSE CAST(round({KMV_K - 1} * {KMV_SPACE!r}
                                      / CAST(m.kth AS DOUBLE)) AS BIGINT)
                      END AS DOUBLE) - t.true_distinct)
                  / t.true_distinct, 6) AS rel_error,
            abs(CAST(CASE WHEN m.kth IS NULL THEN m.n_kept
-               ELSE CAST(round(127 * {float(1 << 60)!r}
+               ELSE CAST(round({KMV_K - 1} * {KMV_SPACE!r}
                                / CAST(m.kth AS DOUBLE)) AS BIGINT)
                END AS DOUBLE) - t.true_distinct)
                <= 0.35 * t.true_distinct + 1 AS within_bound
@@ -2204,50 +2025,26 @@ def _kmv_stream_scratch(sf_dir: str) -> str:
     ),
 )
 def stream_kmv_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from parquet_exporter_spark.streaming.kmv_ingest import (
-        committed_batches,
-        kmv_partial,
-        merge_kmv,
-        read_kmv_hashes,
-        serve_kmv_estimate,
-    )
-    from parquet_exporter_spark.streaming.partial_store import (
-        commit_partials_batched,
-    )
-
-    store = _kmv_stream_scratch(sf_dir)
+    store = scratch_dir("skmv", os.path.join(sf_dir, "lineitem.parquet"))
     li = read_table(spark, sf_dir, "lineitem")
     keyed = li.select(
         "l_partkey", (F.col("l_orderkey") % _SKMV_PARTS).alias("batch")
     )
-    if len(committed_batches(store)) < _SKMV_PARTS:
-        # Optimization r15 (VERDICT item 4): one-job batched bootstrap —
-        # see stream_tdigest_twin.
-        commit_partials_batched(
-            kmv_partial(keyed, "l_partkey", batch_col="batch"),
-            list(range(_SKMV_PARTS)),
-            store,
-            "batch",
-        )
-    hashes = read_kmv_hashes(spark, store)
-    served = serve_kmv_estimate(spark, hashes)
-    # whole-stream bottom-k, built single-pass for the law check
-    from pyspark.sql import Window
-
-    whole = kmv_partial(keyed.select("l_partkey"), "l_partkey")
-    wk = whole.withColumn(
-        "rk", F.row_number().over(Window.orderBy("hv")).cast("long")
-    ).agg(
-        F.max(F.when(F.col("rk") == 128, F.col("hv")))
-        .cast("long")
-        .alias("kth_whole")
+    # one-job batched bootstrap — see stream_tdigest_twin
+    commit_partials_batched(
+        kmv_partial(keyed, "l_partkey", batch_col="batch"),
+        list(range(_SKMV_PARTS)),
+        store,
+        "batch",
     )
-    truth = li.agg(
-        F.countDistinct("l_partkey").cast("long").alias("true_distinct")
+    served = serve_kmv_estimate(spark, read_kmv_hashes(spark, store))
+    # whole-stream bottom-k, built single-pass for the law check
+    whole = serve_kmv_estimate(spark, kmv_partial(li, "l_partkey")).select(
+        F.col("kth").alias("kth_whole")
     )
     return (
-        served.crossJoin(F.broadcast(wk))
-        .crossJoin(F.broadcast(truth))
+        served.crossJoin(F.broadcast(whole))
+        .crossJoin(F.broadcast(true_distinct(li, "l_partkey")))
         .select(
             "k",
             F.lit(_SKMV_PARTS).cast("long").alias("n_batches"),
@@ -2257,20 +2054,6 @@ def stream_kmv_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("kth").eqNullSafe(F.col("kth_whole")).alias("merge_exact"),
             "est_distinct",
             "true_distinct",
-            F.round(
-                F.abs(
-                    F.col("est_distinct").cast("double")
-                    - F.col("true_distinct")
-                )
-                / F.col("true_distinct"),
-                6,
-            ).alias("rel_error"),
-            (
-                F.abs(
-                    F.col("est_distinct").cast("double")
-                    - F.col("true_distinct")
-                )
-                <= 0.35 * F.col("true_distinct") + 1
-            ).alias("within_bound"),
+            *distinct_verdict(0.35),
         )
     )

@@ -13,10 +13,13 @@ estimates for a literal probe-key set with the one-sided CMS guarantee
 emitted as data: est >= true count ALWAYS (counters only ever add),
 with the measured overcount alongside.
 
-Hash family is agg_count_min_portable's (queries/aggregates.py): a
-31-bit md5-prefix base hash fed through d=4 pairwise-independent
-(a*h + b) mod p mod w maps with LCG-derived literal coefficients —
-identical in both engines, no engine-private binary.
+This module is the one implementation of the portable CMS: the batch
+queries agg_count_min_portable and agg_cms_merge
+(queries/aggregates.py) build through ``_bucket_rows`` /
+``cms_partial`` too. A 31-bit md5-prefix base hash feeds d=4
+pairwise-independent (a*h + b) mod p mod w maps with LCG-derived
+literal coefficients — identical in both engines, no engine-private
+binary.
 
 Store protocol: partial_store (append-only files + durable markers;
 replays no-op; compaction supersedes bounded batches only after its
@@ -38,7 +41,6 @@ from pyspark.sql import functions as F
 
 from parquet_exporter_spark.functions import dedup as _D
 from parquet_exporter_spark.streaming.partial_store import (
-    commit_compaction,
     commit_partial,
     committed_batches,
     read_partials,
@@ -53,20 +55,16 @@ __all__ = [
     "read_cms_counters",
     "merge_cms",
     "serve_cms_estimates",
-    "compact_cms_store",
 ]
 
-# MUST stay in lockstep with queries/aggregates.py _CMS_D/_CMS_W (the
-# portable batch sketch family)
-CMS_D = 4
-CMS_W = 64
+CMS_D = 4  # depth (hash functions)
+CMS_W = 64  # width (buckets per depth)
 
 
-def _bucket_rows(
-    df: DataFrame, key_col: str, batch_col: str | None = None
-) -> DataFrame:
+def _bucket_rows(df: DataFrame, key_col: str, *keep: str) -> DataFrame:
+    """One (depth, bucket) row per input row and depth, carrying the
+    caller-named ``keep`` columns through."""
     coeffs = _D.hash_coefficients(CMS_D)
-    keep = [F.col(batch_col)] if batch_col else []
     h = df.select(
         *keep, _D.base_hash_31(F.col(key_col).cast("string")).alias("h")
     )
@@ -103,8 +101,10 @@ def cms_partial(
     bootstrap), every batch's counters come out of one aggregate keyed
     additionally by the batch — per-batch rows identical (pure counting
     per (batch, cell))."""
-    keys = ([batch_col] if batch_col else []) + ["depth", "bucket"]
-    return _bucket_rows(batch_df, key_col, batch_col).groupBy(*keys).agg(
+    keep = [batch_col] if batch_col else []
+    return _bucket_rows(batch_df, key_col, *keep).groupBy(
+        *keep, "depth", "bucket"
+    ).agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
 
@@ -124,23 +124,12 @@ def read_cms_counters(spark, store_dir: str) -> DataFrame | None:
 
 def merge_cms(counters: DataFrame) -> DataFrame:
     """Counter addition over tagged partials — grouping-invariant, so
-    the merge equals the single-pass build cell for cell. Output
-    (depth, bucket, c)."""
+    the merge equals the single-pass build cell for cell, and it is the
+    lossless compaction fold (``partial_store.compact_partials``).
+    Output (depth, bucket, c)."""
     return counters.groupBy("depth", "bucket").agg(
         F.sum("c").cast("long").alias("c")
     )
-
-
-def compact_cms_store(spark, store_dir: str, upto_batch: int) -> bool:
-    """Fold partials with batch_id <= bound into one. Lossless
-    (associative counter add), pinned in tests."""
-    live = read_partials(spark, store_dir)
-    if live is None:
-        return False
-    old = live.filter(F.col("batch_id") <= upto_batch)
-    if old.limit(1).count() == 0:
-        return False
-    return commit_compaction(merge_cms(old), upto_batch, store_dir)
 
 
 def serve_cms_estimates(spark, counters: DataFrame, probe_keys: list) -> DataFrame:
@@ -156,34 +145,7 @@ def serve_cms_estimates(spark, counters: DataFrame, probe_keys: list) -> DataFra
     # createDataFrame spreads a handful of rows over defaultParallelism
     # near-empty tasks per downstream operator
     probes = tiny_df(spark, [(str(k),) for k in probe_keys], "key string")
-    pb = (
-        probes.select("key", _D.base_hash_31(F.col("key")).alias("h"))
-        .select(
-            "key",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("depth"),
-                            (
-                                (F.lit(a) * F.col("h") + F.lit(b))
-                                % _D.MERSENNE_31
-                                % CMS_W
-                            ).alias("bucket"),
-                        )
-                        for i, (a, b) in enumerate(
-                            _D.hash_coefficients(CMS_D)
-                        )
-                    ]
-                )
-            ).alias("db"),
-        )
-        .select(
-            "key",
-            F.col("db.depth").alias("depth"),
-            F.col("db.bucket").alias("bucket"),
-        )
-    )
+    pb = _bucket_rows(probes, "key", "key")
     return (
         pb.join(merged, ["depth", "bucket"], "left")
         .groupBy("key")

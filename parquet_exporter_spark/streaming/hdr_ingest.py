@@ -13,7 +13,10 @@ registered ``stream_hdr_twin`` hash-checks that identity bucket by
 bucket (FULL OUTER mismatch count provably 0) and serves quantiles off
 the merged sketch with the structural 12.5% relative-width ceiling.
 
-Construction is agg_hdr_histogram's (queries/aggregates.py): integer
+This module is the one implementation of the portable HDR histogram:
+the batch queries agg_hdr_histogram and agg_hdr_merge
+(queries/aggregates.py) build, merge and serve through
+``hdr_partial`` / ``merge_hdr`` / ``serve_hdr_quantiles`` too. Integer
 cents -> (bit-length octave, one of 8 linear subbuckets) — exact
 integer arithmetic only, no libm in any decision, one map-side-
 combinable aggregate per batch. Per-batch state is O(octaves * 8)
@@ -37,7 +40,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parquet_exporter_spark.streaming.partial_store import (
-    commit_compaction,
     commit_partial,
     committed_batches,
     read_partials,
@@ -51,11 +53,9 @@ __all__ = [
     "read_hdr_buckets",
     "merge_hdr",
     "serve_hdr_quantiles",
-    "compact_hdr_store",
 ]
 
-# MUST stay in lockstep with queries/aggregates.py _HDR_SUB: 8 linear
-# subbuckets per bit-length octave -> relative bucket width <= 1/8.
+# linear subbuckets per bit-length octave -> relative bucket width <= 1/8
 HDR_SUB = 8
 
 
@@ -112,25 +112,14 @@ def read_hdr_buckets(spark, store_dir: str) -> DataFrame | None:
 def merge_hdr(buckets: DataFrame) -> DataFrame:
     """Counter add + bound min/max over tagged partials — all three
     folds associative, so the merge is grouping-invariant and equals
-    the single-pass build. Output (lvl, sub, c, lo, hi)."""
+    the single-pass build; it is also the lossless compaction fold
+    (``partial_store.compact_partials``). Output (lvl, sub, c, lo,
+    hi)."""
     return buckets.groupBy("lvl", "sub").agg(
         F.sum("c").cast("long").alias("c"),
         F.min("lo").cast("long").alias("lo"),
         F.max("hi").cast("long").alias("hi"),
     )
-
-
-def compact_hdr_store(spark, store_dir: str, upto_batch: int) -> bool:
-    """Fold partials with batch_id <= bound into one. Lossless: the
-    compacted store's merged histogram is IDENTICAL (associative
-    counter add), pinned in tests."""
-    live = read_partials(spark, store_dir)
-    if live is None:
-        return False
-    old = live.filter(F.col("batch_id") <= upto_batch)
-    if old.limit(1).count() == 0:
-        return False
-    return commit_compaction(merge_hdr(old), upto_batch, store_dir)
 
 
 def serve_hdr_quantiles(spark, buckets: DataFrame, probes: list[float]) -> DataFrame:

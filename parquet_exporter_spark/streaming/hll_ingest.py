@@ -12,12 +12,15 @@ hash-checked by the registered ``stream_hll_twin`` (register mismatch
 count vs the whole-corpus sketch is provably 0) and re-pinned across a
 real readStream trigger boundary in tests/test_streaming.py.
 
-Construction is agg_hll_portable's (queries/aggregates.py): a 60-bit
-md5-prefix hash splits into a 9-bit register index and 51-bit
-remainder whose leading-zero count is rho (bit-length via base-2
-rendering — exact integers, no libm in any decision); the estimator
-keeps the indicator sum exact by integer scaling (s_scaled = sum
-2^(52-rho) + V*2^52) and applies the published linear-counting branch.
+This module is the one implementation of the portable HLL: the batch
+queries agg_hll_portable and agg_hll_union (queries/aggregates.py)
+build, merge and serve through ``hll_partial`` / ``merge_hll`` /
+``serve_hll_estimate`` too. A 60-bit md5-prefix hash splits into a
+9-bit register index and 51-bit remainder whose leading-zero count is
+rho (bit-length via base-2 rendering — exact integers, no libm in any
+decision); the estimator keeps the indicator sum exact by integer
+scaling (s_scaled = sum 2^(52-rho) + V*2^52) and applies the published
+linear-counting branch.
 
 Store protocol: partial_store (append-only files + durable markers;
 replays no-op; compaction supersedes bounded batches only after its
@@ -39,13 +42,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parquet_exporter_spark.streaming.partial_store import (
-    commit_compaction,
     commit_partial,
     committed_batches,
     read_partials,
 )
 
 __all__ = [
+    "HLL_HEX",
     "HLL_REM",
     "HLL_M",
     "hll_partial",
@@ -54,19 +57,18 @@ __all__ = [
     "read_hll_registers",
     "merge_hll",
     "serve_hll_estimate",
-    "compact_hll_store",
 ]
 
-# MUST stay in lockstep with queries/aggregates.py _HLL_* (the portable
-# batch sketch family): 60-bit hash = 9-bit register index + 51-bit
-# remainder; rho in [1, 52].
+# 60-bit hash = 9-bit register index + 51-bit remainder; rho in [1, 52].
 HLL_HEX = 15  # md5 hex prefix chars -> 60-bit BIGINT-exact hash
-HLL_REM = 51
-HLL_M = 512
-HLL_RMAX = HLL_REM + 1
+HLL_REM = 51  # low-order hash bits that feed rho
+HLL_M = 512  # 2^9 registers: std error 1.04/sqrt(512) ~ 4.6%
+HLL_RMAX = HLL_REM + 1  # rho of an all-zero remainder
+# alpha_m * m^2 * 2^RMAX, folded to ONE literal in Python so each engine
+# performs exactly one IEEE division by the exact integer register sum.
 HLL_ALPHA = 0.7213 / (1.0 + 1.079 / HLL_M)
 HLL_NUM = HLL_ALPHA * HLL_M * HLL_M * float(1 << HLL_RMAX)
-HLL_LC_CUT = 2.5 * HLL_M
+HLL_LC_CUT = 2.5 * HLL_M  # below this raw estimate, linear counting wins
 
 
 def hll_partial(
@@ -123,29 +125,17 @@ def read_hll_registers(spark, store_dir: str) -> DataFrame | None:
 
 def merge_hll(regs: DataFrame) -> DataFrame:
     """Register-wise max over tagged partials — the exactly-associative
-    HLL merge. Output (bucket, r), <= m rows."""
+    HLL merge. Output (bucket, r), <= m rows. Also the compaction fold
+    (``partial_store.compact_partials``): max is idempotent, so the
+    compacted store serves the IDENTICAL registers."""
     return regs.groupBy("bucket").agg(F.max("r").cast("long").alias("r"))
-
-
-def compact_hll_store(spark, store_dir: str, upto_batch: int) -> bool:
-    """Fold partials with batch_id <= bound into one register partial.
-    Because max is associative and idempotent, the compacted store
-    serves the IDENTICAL registers (and therefore the identical
-    estimate) as the uncompacted one — pinned in tests."""
-    live = read_partials(spark, store_dir)
-    if live is None:
-        return False
-    old = live.filter(F.col("batch_id") <= upto_batch)
-    if old.limit(1).count() == 0:
-        return False
-    return commit_compaction(merge_hll(old), upto_batch, store_dir)
 
 
 def serve_hll_estimate(spark, regs: DataFrame) -> DataFrame:
     """The merged global state and estimate as ONE row: (m, n_nonempty,
-    v_empty, s_scaled, est_distinct) — agg_hll_portable's exact-integer
-    estimator (one IEEE divide of exact operands; linear-counting
-    branch below the published cutoff)."""
+    v_empty, s_scaled, est_distinct) — the exact-integer estimator (one
+    IEEE divide of exact operands; linear-counting branch below the
+    published cutoff)."""
     merged = merge_hll(regs)
     state = merged.agg(
         F.count(F.lit(1)).cast("long").alias("n_nonempty"),

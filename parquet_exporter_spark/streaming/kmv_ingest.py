@@ -12,9 +12,12 @@ registered ``stream_kmv_twin`` hash-checks that law (NULL-safe for
 under-k streams) and serves the (k-1)/U_(k) distinct estimate with
 truth and error verdict.
 
-Hashes are the portable 60-bit md5-prefix family (exact in BIGINT on
-both engines); the per-batch bottom-k is TakeOrderedAndProject —
-per-partition top-k, no global sort (the agg_kmv_distinct shape).
+This module is the one implementation of the portable KMV: the batch
+queries agg_kmv_distinct and agg_kmv_union (queries/aggregates.py)
+build, merge and serve through ``kmv_partial`` / ``merge_kmv`` /
+``serve_kmv_estimate`` too. Hashes are the portable 60-bit md5-prefix
+family (exact in BIGINT on both engines); the per-batch bottom-k is
+TakeOrderedAndProject — per-partition top-k, no global sort.
 
 Store protocol: partial_store (append-only files + durable markers;
 replays no-op; compaction supersedes bounded batches only after its
@@ -35,7 +38,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parquet_exporter_spark.streaming.partial_store import (
-    commit_compaction,
     commit_partial,
     committed_batches,
     read_partials,
@@ -51,11 +53,9 @@ __all__ = [
     "read_kmv_hashes",
     "merge_kmv",
     "serve_kmv_estimate",
-    "compact_kmv_store",
     "kmv_jaccard_stores",
 ]
 
-# MUST stay in lockstep with queries/aggregates.py _KMV_K/_KMV_HEX
 KMV_K = 128
 KMV_HEX = 15  # 60-bit hashes: exact in BIGINT on both engines
 KMV_SPACE = float(1 << 60)
@@ -109,22 +109,11 @@ def merge_kmv(hashes: DataFrame) -> DataFrame:
     """Union + re-truncate over tagged partials: DISTINCT the <= n*k
     kept hashes, keep the k smallest — grouping-invariant by the
     bottom-k invariant, so the merged state equals the single-pass
-    whole-stream bottom-k exactly."""
+    whole-stream bottom-k exactly. Also the lossless compaction fold
+    (``partial_store.compact_partials``)."""
     return (
         hashes.select("hv").distinct().orderBy("hv").limit(KMV_K)
     )
-
-
-def compact_kmv_store(spark, store_dir: str, upto_batch: int) -> bool:
-    """Fold partials with batch_id <= bound into one k-row partial.
-    Lossless (bottom-k invariant), pinned in tests."""
-    live = read_partials(spark, store_dir)
-    if live is None:
-        return False
-    old = live.filter(F.col("batch_id") <= upto_batch)
-    if old.limit(1).count() == 0:
-        return False
-    return commit_compaction(merge_kmv(old), upto_batch, store_dir)
 
 
 def serve_kmv_estimate(spark, hashes: DataFrame) -> DataFrame:

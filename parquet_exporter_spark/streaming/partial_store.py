@@ -1,6 +1,6 @@
 """Append-only partial-sketch store shared by the streaming sketch
-maintainers (t-digest, HLL): one immutable parquet file per committed
-micro-batch plus a durable marker.
+maintainers (t-digest, HLL, HDR, CMS, KMV): one immutable parquet file
+per committed micro-batch plus a durable marker.
 
 Exactly-once is simpler than the SCD2 generational protocol because
 partials are immutable and append-only: a replay of a committed batch
@@ -220,6 +220,22 @@ def commit_compaction(
         if not os.path.basename(p).startswith(prefix):
             os.unlink(p)
     return True
+
+
+def compact_partials(spark, store_dir: str, upto_batch: int, fold) -> bool:
+    """Fold every live partial with batch_id <= ``upto_batch`` into one
+    partial and publish it as the store's compacted base. ``fold`` maps
+    the tagged live rows to rows in the partial's schema (the sketch's
+    merge; t-digest's re-bin renamed back to centroid columns). False if
+    nothing is live up to the bound or a compaction at or above it
+    exists."""
+    live = read_partials(spark, store_dir)
+    if live is None:
+        return False
+    old = live.filter(F.col("batch_id") <= upto_batch)
+    if old.limit(1).count() == 0:
+        return False
+    return commit_compaction(fold(old), upto_batch, store_dir)
 
 
 def _write_marker(marker: str, payload: int) -> None:

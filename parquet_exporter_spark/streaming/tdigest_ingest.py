@@ -7,9 +7,8 @@ modules share.
 
 Per micro-batch:
 
-- ``tdigest_partial`` builds the batch's dyadic t-digest (the exact
-  construction of agg_tdigest_sketch, queries/aggregates.py: rank ->
-  tail distance -> bit-length level -> 4-way sub-split; exact integer
+- ``tdigest_partial`` builds the batch's dyadic t-digest (rank -> tail
+  distance -> bit-length level -> 4-way sub-split; exact integer
   arithmetic throughout) — O(log batch) centroid rows.
 - ``tdigest_apply_batch`` commits the centroids APPEND-ONLY under a
   batch-scoped name plus a durable marker. Partials are immutable, so
@@ -20,10 +19,16 @@ Per micro-batch:
   identical content (the partial is a deterministic function of the
   batch).
 - ``serve_tdigest_quantiles`` merges ALL committed partials without
-  touching data rows — the agg_tdigest_merged re-bin: centroids sorted
-  by value bounds, cumulative weight assigns each centroid's midpoint
-  rank to a merged dyadic cell, probes interpolate inside the containing
-  bucket's exact cents bounds.
+  touching data rows — the re-bin: centroids sorted by value bounds,
+  cumulative weight assigns each centroid's midpoint rank to a merged
+  dyadic cell, probes interpolate inside the containing bucket's exact
+  cents bounds.
+
+These functions are the one implementation of the partial/merge/serve
+t-digest: the batch query agg_tdigest_merged (queries/aggregates.py)
+builds its per-half partials, merges and serves through them too. The
+global-rank batch t-digest queries (agg_tdigest_sketch and its family)
+emit rank bounds the partial does not carry and build their own.
 
 Equality contract (pinned in tests/test_streaming.py and oracled by the
 registered ``stream_tdigest_twin``): serving off the store after k
@@ -32,14 +37,15 @@ bit-for-bit, because build, merge, and the interpolation inputs are all
 exact integers; the one IEEE divide is deterministic on both engines.
 
 Scale shape: state is O(k log n) centroid rows (k = committed batches).
-``compact_tdigest_store`` folds all live partials up to a bound into
-one partial through the same re-bin and commits it with the
-partial_store compaction protocol. The fold is ACCURACY-preserving,
-not content-identical: re-binning a re-bin can place mass in different
-dyadic cells than one flat merge would, so the pinned contract is
-total-weight and value-bound conservation plus the t-digest rank-error
-bound on every served quantile (tests/test_streaming.py), never
-bucket-level equality. Serving never re-reads data either way.
+``partial_store.compact_partials(..., fold_tdigest)`` folds all live
+partials up to a bound into one partial through the same re-bin and
+commits it with the partial_store compaction protocol. The fold is
+ACCURACY-preserving, not content-identical: re-binning a re-bin can
+place mass in different dyadic cells than one flat merge would, so the
+pinned contract is total-weight and value-bound conservation plus the
+t-digest rank-error bound on every served quantile
+(tests/test_streaming.py), never bucket-level equality. Serving never
+re-reads data either way.
 
 Wire-up: ``parsed.writeStream.foreachBatch(lambda b, i:
 tdigest_apply_batch(b, i, store_dir)).option("checkpointLocation", ...)``.
@@ -55,7 +61,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parquet_exporter_spark.streaming.partial_store import (
-    commit_compaction,
     commit_partial,
     committed_batches,
     read_partials,
@@ -68,13 +73,11 @@ __all__ = [
     "committed_batches",
     "read_tdigest_centroids",
     "merge_tdigest",
+    "fold_tdigest",
     "serve_tdigest_quantiles",
-    "compact_tdigest_store",
 ]
 
-# dyadic sub-buckets per level — MUST stay in lockstep with
-# queries/aggregates.py _TD_SUB (the batch sketch family)
-TD_SUB = 4
+TD_SUB = 4  # sub-buckets per dyadic level: rank error <= d/4 at tail-distance d
 
 
 def tdigest_partial(
@@ -155,21 +158,13 @@ def read_tdigest_centroids(spark, store_dir: str) -> DataFrame | None:
     return read_partials(spark, store_dir)
 
 
-def compact_tdigest_store(spark, store_dir: str, upto_batch: int) -> bool:
-    """Fold every live partial with batch_id <= ``upto_batch`` into ONE
-    partial through the merge re-bin and commit it as the store's
-    compacted base (older files deleted only after the durable marker).
-    False if nothing to fold or a newer compaction exists. The fold is
-    accuracy-preserving (see module docstring), so after compaction the
-    store serves the same n and value bounds and every quantile stays
-    inside the t-digest rank-error bound."""
-    live = read_partials(spark, store_dir)
-    if live is None:
-        return False
-    old = live.filter(F.col("batch_id") <= upto_batch)
-    if old.limit(1).count() == 0:
-        return False
-    folded = merge_tdigest(old).select(
+def fold_tdigest(cent: DataFrame) -> DataFrame:
+    """The compaction fold for ``partial_store.compact_partials``: the
+    merge re-bin written back as centroid rows. Accuracy-preserving (see
+    module docstring): the compacted store serves the same n and value
+    bounds and every quantile stays inside the t-digest rank-error
+    bound."""
+    return merge_tdigest(cent).select(
         F.col("side2").alias("side"),
         F.col("lvl2").alias("lvl"),
         F.col("sub2").alias("sub"),
@@ -178,11 +173,10 @@ def compact_tdigest_store(spark, store_dir: str, upto_batch: int) -> bool:
         F.col("mhi").alias("hi"),
         F.col("msc").alias("sc"),
     )
-    return commit_compaction(folded, upto_batch, store_dir)
 
 
 def merge_tdigest(cent: DataFrame) -> DataFrame:
-    """The agg_tdigest_merged re-bin over a tagged centroid table:
+    """The merge re-bin over a tagged centroid table:
     sort by (lo, hi, batch_id, side, lvl, sub), cumulative weight,
     midpoint rank -> merged dyadic cell. Output one row per merged
     bucket with exact cents bounds and the disjoint cum-weight span

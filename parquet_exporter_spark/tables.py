@@ -11,7 +11,10 @@ Queries broadcast dims explicitly; facts are never collected or broadcast.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import tempfile
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -140,6 +143,22 @@ def table_rowcount(sf_dir: str, name: str) -> int:
     total = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     _rowcount_cache[key] = total
     return total
+
+
+def scratch_dir(kind: str, pattern: str) -> str:
+    """Versioned scratch path ``<tempdir>/pes_<kind>_<tag>`` for state
+    derived from the files matching the glob ``pattern`` (persisted
+    indexes, sketch stores, format round-trips). The tag hashes ``kind``
+    with every matching file's path, sub-second mtime and size, so data
+    regenerated within the same second still gets a fresh path and a
+    stale copy is never reused; ``kind`` keeps two derivations of one
+    source apart. A pattern matching nothing is keyed on itself."""
+    files = sorted(glob.glob(pattern))
+    version = "|".join(
+        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in files
+    ) or pattern
+    tag = hashlib.sha256(f"{kind}|{version}".encode()).hexdigest()[:12]
+    return os.path.join(tempfile.gettempdir(), f"pes_{kind}_{tag}")
 
 
 def load(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:

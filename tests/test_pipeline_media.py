@@ -64,3 +64,17 @@ def test_media_ingest_end_to_end(spark, media_dir, tmp_path):
     # determinism: re-running produces the same card
     out2 = str(tmp_path / "media_out2")
     assert ingest_media(spark, media_dir, out2, min_pixels=64) == card
+
+
+def test_media_ingest_with_nothing_quarantined(spark, tmp_path):
+    """A clean input writes a zero-row quarantine: the card must read it
+    back as empty, not fail to infer a schema from a directory with no
+    data file."""
+    d = tmp_path / "clean_in"
+    d.mkdir()
+    img = np.zeros((32, 32), dtype=np.uint8)
+    img[8:24, 8:24] = 255
+    (d / "only.png").write_bytes(codecs.encode_png(img))
+    card = ingest_media(spark, str(d), str(tmp_path / "clean_out"), min_pixels=64)
+    assert card["rejected"] == {}
+    assert card["kept"]["png"][0] == 1

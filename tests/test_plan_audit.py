@@ -90,6 +90,23 @@ ALLOWED: dict[str, tuple[set[str], str]] = {
         "TakeOrderedAndProject; the single-partition window ranks the "
         "<= k merged SKETCH rows, bnljs join 1-row state/truth scalars",
     ),
+    "agg_hdr_histogram": (
+        {"bnlj", "single_partition_x5"},
+        "builds and serves through streaming/hdr_ingest.py, the shape "
+        "stream_hdr_twin is waived for: single-partition windows run "
+        "over the O(octaves * 8)-row BUCKET table (cum-count serve + "
+        "n=sum(c)) and the verification-only global exact ranking; "
+        "gathers/bnljs carry 2 probe rows and 1-row scalars — the serve "
+        "path reads the counter table only",
+    ),
+    "agg_hdr_merge": (
+        {"bnlj", "single_partition_x6"},
+        "stream_hdr_twin's shape over two in-memory half partials "
+        "instead of a store: single-partition windows run over the "
+        "O(octaves * 8)-row BUCKET table and the verification-only "
+        "global exact ranking; gathers/bnljs carry 2 probe rows, the "
+        "1-row law count and 1-row scalars",
+    ),
     "stream_hdr_twin": (
         {"bnlj", "single_partition_x6"},
         "agg_hdr_merge's shape driven through the streaming "

@@ -97,6 +97,120 @@ def test_batched_bootstrap_skips_committed_batches(spark, tmp_path):
     assert _rows(spark, store) == _rows(spark, loop_store)
 
 
+@pytest.mark.parametrize("sketch", ["tdigest", "hdr", "cms", "hll", "kmv"])
+def test_compact_partials_preserves_merged_state(spark, tmp_path, sketch):
+    """compact_partials over three committed batches at bound 1: the
+    exactly-mergeable sketches serve the identical merged state, the
+    t-digest re-bin conserves total weight and the lo/hi bounds, and a
+    second compaction at the same bound is a no-op."""
+    from parquet_exporter_spark.streaming import (
+        cms_ingest,
+        hdr_ingest,
+        hll_ingest,
+        kmv_ingest,
+        tdigest_ingest,
+    )
+    from parquet_exporter_spark.streaming.partial_store import compact_partials
+
+    build, fold = {
+        "tdigest": (tdigest_ingest.tdigest_partial, tdigest_ingest.fold_tdigest),
+        "hdr": (hdr_ingest.hdr_partial, hdr_ingest.merge_hdr),
+        "cms": (cms_ingest.cms_partial, cms_ingest.merge_cms),
+        "hll": (hll_ingest.hll_partial, hll_ingest.merge_hll),
+        "kmv": (kmv_ingest.kmv_partial, kmv_ingest.merge_kmv),
+    }[sketch]
+    df = spark.createDataFrame(
+        [(7 * i % 113 + 1, i % 3) for i in range(200)], "v long, batch long"
+    )
+    store = str(tmp_path / "store")
+    for b in range(3):
+        assert commit_partial(
+            build(df.filter(F.col("batch") == b).select("v"), "v"), b, store
+        )
+
+    def state(live):
+        if sketch == "tdigest":
+            return tuple(live.agg(F.sum("w"), F.min("lo"), F.max("hi")).first())
+        return sorted(map(tuple, fold(live).collect()))
+
+    before = state(read_partials(spark, store))
+    assert compact_partials(spark, store, 1, fold)
+    assert state(read_partials(spark, store)) == before
+    assert not compact_partials(spark, store, 1, fold)
+
+
+def test_nearest_centroid_edge_rows_match_when_chain(spark):
+    """nearest_centroid gives the cluster and dist the K-deep
+    F.least/when-chain assignment gave, including a tie (lowest index
+    wins), a NULL and a short vector (no distance: cluster K-1, NULL
+    dist) and a NaN component (every distance NaN: cluster 0)."""
+    from parquet_exporter_spark.operators.pq import nearest_centroid
+
+    cents = [[0.0, 0.0, 0.0], [1.0, 1.0, 1.0], [1.0, 1.0, 1.0], [5.0, 5.0, 5.0]]
+    rows = [
+        (0, [0.1, 0.2, 0.0]),
+        (1, [1.0, 1.0, 1.0]),
+        (2, None),
+        (3, [float("nan"), 1.0, 1.0]),
+        (4, [1.0]),
+        (5, [9.0, 9.0, 9.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, x array<double>")
+    dists = [
+        F.round(
+            F.aggregate(
+                F.zip_with(
+                    "x", F.array(*[F.lit(v) for v in c]), lambda a, b: (a - b) * (a - b)
+                ),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            ),
+            9,
+        )
+        for c in cents
+    ]
+    m = F.least(*dists)
+    chain = F.lit(len(cents) - 1)
+    for cid in range(len(cents) - 2, -1, -1):
+        chain = F.when(dists[cid] == m, F.lit(cid)).otherwise(chain)
+    ref = df.select("vec_id", chain.alias("cluster"), m.alias("dist"))
+    want = {r.vec_id: (r.cluster, r.dist) for r in ref.collect()}
+    got = {r.vec_id: (r.cluster, r.dist) for r in nearest_centroid(df, cents).collect()}
+
+    def same(a, b):
+        return a == b or (a != a and b != b)  # NaN-aware
+
+    assert got.keys() == want.keys()
+    for k, (cluster, dist) in want.items():
+        assert got[k][0] == cluster and same(got[k][1], dist), (k, got[k], want[k])
+    assert got[1] == (1, 0.0)
+    assert got[2] == (3, None) and got[4] == (3, None)
+    assert got[3][0] == 0 and got[3][1] != got[3][1]
+
+
+def test_scratch_dir_tracks_source_version(tmp_path):
+    """tables.scratch_dir: the same files give the same path; a changed
+    size or sub-second mtime gives a new one; two kinds over one source
+    stay apart; a pattern that matches nothing does not raise."""
+    from parquet_exporter_spark.tables import scratch_dir
+
+    src = tmp_path / "t.parquet"
+    src.write_bytes(b"abc")
+    pattern = str(tmp_path / "t*")
+    os.utime(src, ns=(0, 1_000_000_000_250_000_000))
+    a = scratch_dir("k", pattern)
+    assert scratch_dir("k", pattern) == a
+    assert scratch_dir("other", pattern) != a
+    os.utime(src, ns=(0, 1_000_000_000_750_000_000))
+    b = scratch_dir("k", pattern)
+    assert b != a
+    src.write_bytes(b"abcd")
+    os.utime(src, ns=(0, 1_000_000_000_750_000_000))
+    assert scratch_dir("k", pattern) != b
+    missing = scratch_dir("k", str(tmp_path / "missing*"))
+    assert os.path.basename(missing).startswith("pes_k_")
+
+
 def test_pq_expr_literals_round_trip_exactly(spark):
     """_dists builds the codebook as a SQL string; the doubles must
     survive the string trip bit-for-bit (repr + correctly-rounded

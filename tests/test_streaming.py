@@ -19,6 +19,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from parquet_exporter_spark.streaming.partial_store import compact_partials
 from parquet_exporter_spark.streaming.windows import (
     EVENTS_SCHEMA,
     dedup_within_watermark,
@@ -1142,15 +1143,15 @@ def test_streaming_tdigest_store_equals_batch_merge_across_boundary(
 
 @pytest.mark.slow  # real-readStream replay / restart scenario (see pytest.ini)
 def test_streaming_tdigest_compaction_preserves_accuracy(spark, tmp_path):
-    """compact_tdigest_store folds partials <= bound into one committed
-    base: total weight and global value bounds are conserved exactly,
+    """compact_partials with fold_tdigest folds partials <= bound into
+    one committed base: total weight and global value bounds are conserved exactly,
     superseded files are gone, later appends still work, and every
     served quantile off the compacted store stays within the t-digest
     rank-error bound against the exact values (the fold is
     accuracy-preserving, NOT bucket-identical — that is the documented
     contract)."""
     from parquet_exporter_spark.streaming.tdigest_ingest import (
-        compact_tdigest_store,
+        fold_tdigest,
         read_tdigest_centroids,
         serve_tdigest_quantiles,
         tdigest_apply_batch,
@@ -1168,8 +1169,8 @@ def test_streaming_tdigest_compaction_preserves_accuracy(spark, tmp_path):
             spark.createDataFrame([(v,) for v in vals], schema), i, store
         )
     # compact batches 0-1; batch 2 stays a live partial
-    assert compact_tdigest_store(spark, store, upto_batch=1)
-    assert not compact_tdigest_store(spark, store, upto_batch=1)  # no-op
+    assert compact_partials(spark, store, 1, fold_tdigest)
+    assert not compact_partials(spark, store, 1, fold_tdigest)  # no-op
     files = os.listdir(store)
     assert any(f.startswith("compact-00000001-") for f in files)
     assert not any(f.startswith("cent-00000000-") for f in files)
@@ -1215,7 +1216,6 @@ def test_streaming_hll_registers_exact_across_boundary_and_compaction(
 
     from parquet_exporter_spark.streaming.hll_ingest import (
         committed_batches,
-        compact_hll_store,
         hll_apply_batch,
         hll_partial,
         merge_hll,
@@ -1276,7 +1276,7 @@ def test_streaming_hll_registers_exact_across_boundary_and_compaction(
     assert abs(est_stream.est_distinct - true_n) <= 0.15 * true_n + 1
 
     # compaction: idempotent max -> identical registers, <= m rows left
-    assert compact_hll_store(spark, store, upto_batch=1)
+    assert compact_partials(spark, store, 1, merge_hll)
     regs2 = read_hll_registers(spark, store)
     assert {
         (r.bucket, r.r) for r in merge_hll(regs2).collect()
@@ -1299,7 +1299,6 @@ def test_streaming_hdr_buckets_exact_across_boundary_and_compaction(
 
     from parquet_exporter_spark.streaming.hdr_ingest import (
         committed_batches,
-        compact_hdr_store,
         hdr_apply_batch,
         hdr_partial,
         merge_hdr,
@@ -1369,7 +1368,7 @@ def test_streaming_hdr_buckets_exact_across_boundary_and_compaction(
         assert lo <= exact <= hi
         assert (hi - lo) / lo <= 0.125
     # lossless compaction: identical serve
-    assert compact_hdr_store(spark, store, upto_batch=1)
+    assert compact_partials(spark, store, 1, merge_hdr)
     after = sorted(
         tuple(r)
         for r in serve_hdr_quantiles(
@@ -1392,7 +1391,6 @@ def test_streaming_cms_cells_exact_and_guarantee(spark, tmp_path):
         cms_apply_batch,
         cms_partial,
         committed_batches,
-        compact_cms_store,
         merge_cms,
         read_cms_counters,
         serve_cms_estimates,
@@ -1457,7 +1455,7 @@ def test_streaming_cms_cells_exact_and_guarantee(spark, tmp_path):
     for k in probe:
         assert est[k] >= true_counts.get(k, 0), k
     # lossless compaction
-    assert compact_cms_store(spark, store, upto_batch=1)
+    assert compact_partials(spark, store, 1, merge_cms)
     merged2 = {
         tuple(r)
         for r in merge_cms(read_cms_counters(spark, store))
@@ -1478,7 +1476,6 @@ def test_streaming_kmv_bottomk_invariant_and_compaction(spark, tmp_path):
     from parquet_exporter_spark.streaming.kmv_ingest import (
         KMV_K,
         committed_batches,
-        compact_kmv_store,
         kmv_apply_batch,
         kmv_partial,
         merge_kmv,
@@ -1536,7 +1533,7 @@ def test_streaming_kmv_bottomk_invariant_and_compaction(spark, tmp_path):
     true_n = len(all_keys)
     assert abs(served.est_distinct - true_n) <= 0.35 * true_n + 1
     # lossless compaction, replay no-op on a compacted-away batch
-    assert compact_kmv_store(spark, store, upto_batch=1)
+    assert compact_partials(spark, store, 1, merge_kmv)
     merged2 = sorted(
         r.hv for r in merge_kmv(read_kmv_hashes(spark, store)).collect()
     )

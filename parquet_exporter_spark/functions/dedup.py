@@ -547,7 +547,6 @@ def winnow_containment_pairs(
     containment_threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    persist_handles: list | None = None,
 ) -> DataFrame:
     """Asymmetric near-dup pairs by shingle CONTAINMENT — |A∩B|/|A| and
     |A∩B|/|B| — with candidates from shared WINNOWING fingerprints.
@@ -569,8 +568,6 @@ def winnow_containment_pairs(
     (id, fingerprint) rows (queries/llm7.winnowing_fingerprints; passed
     in to keep this module free of a queries-package import)."""
     fps = fingerprint_fn(docs, id_col=id_col, text_col=text_col).persist()
-    if persist_handles is not None:
-        persist_handles.append(fps)
     kept = (
         fps.groupBy("fingerprint")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -588,14 +585,13 @@ def winnow_containment_pairs(
         .filter(F.col("n_shared") >= min_shared)
         .select("id_a", "id_b")
     )
-    if persist_handles is None:
-        # No caller-managed release: materialize the (small) candidate
-        # pair set now — it is the only consumer that reads fps twice —
-        # then drop the cache so repeated invocations don't accumulate
-        # executor storage until LRU eviction. localCheckpoint blocks are
-        # freed with the DataFrame, unlike an orphaned persist.
-        candidates = candidates.localCheckpoint(eager=True)
-        fps.unpersist()
+    # Materialize the (small) candidate pair set now — it is the only
+    # consumer that reads fps twice — then drop the cache so repeated
+    # invocations don't accumulate executor storage until LRU eviction.
+    # localCheckpoint blocks are freed with the DataFrame, unlike an
+    # orphaned persist.
+    candidates = candidates.localCheckpoint(eager=True)
+    fps.unpersist()
     # Optimization r14 (guide §1.2 step 1, §2.3): the verify stage used to
     # run the shingle HOF chain over EVERY document TWICE (da and db each
     # re-derived _shingled_docs). Shingle only the docs that appear in a
@@ -611,8 +607,6 @@ def winnow_containment_pairs(
     docs_sh = _shingled_docs(
         docs.join(F.broadcast(ids), id_col, "left_semi"), id_col, text_col
     ).persist()
-    if persist_handles is not None:
-        persist_handles.append(docs_sh)
     da = docs_sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     db = docs_sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
@@ -632,9 +626,8 @@ def winnow_containment_pairs(
             >= containment_threshold
         )
     )
-    if persist_handles is None:
-        out = out.localCheckpoint(eager=True)  # materialize before unpersist
-        docs_sh.unpersist()
+    out = out.localCheckpoint(eager=True)  # materialize before unpersist
+    docs_sh.unpersist()
     return out
 
 
@@ -669,8 +662,6 @@ def prefix_filter_jaccard_pairs(
     MinHash-LSH banding (minhash_lsh_pairs) stays the recall/cost knob
     when approximate results are acceptable; this is the exact tier.
     """
-    from pyspark.sql import Window  # noqa: F401  (kept for parity with siblings)
-
     t = threshold_num / threshold_den
     # Optimization r14 (guide §1.2 step 1): without the two persists below,
     # `sized` was referenced three times (prefix explode, verify side a,

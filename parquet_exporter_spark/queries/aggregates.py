@@ -56,6 +56,7 @@ from parquet_exporter_spark.streaming.kmv_ingest import (
 from parquet_exporter_spark.streaming.tdigest_ingest import (
     TD_SUB,
     serve_tdigest_quantiles,
+    tdigest_cell,
     tdigest_partial,
 )
 from parquet_exporter_spark.tables import read_table, tiny_df
@@ -1340,22 +1341,7 @@ def agg_tdigest_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
         (F.row_number().over(w) - 1).cast("long").alias("r0"),
     ).withColumn("n", F.count(F.lit(1)).over(Window.partitionBy()))
-    keyed = ranked.select(
-        "cents",
-        "r0",
-        "n",
-        F.when(2 * F.col("r0") < F.col("n"), 0).otherwise(1).alias("side"),
-        F.when(2 * F.col("r0") < F.col("n"), F.col("r0") + 1)
-        .otherwise(F.col("n") - F.col("r0"))
-        .alias("dd"),
-    )
-    lvled = keyed.withColumn(
-        "lvl", (F.length(F.conv(F.col("dd").cast("string"), 10, 2)) - 1).cast("long")
-    )
-    p = F.expr("shiftleft(1L, CAST(lvl AS INT))")
-    bucketed = lvled.withColumn(
-        "sub", F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {TD_SUB})") / p
-    ).withColumn("sub", F.floor("sub").cast("long"))
+    bucketed = tdigest_cell(ranked, "r0", F.col("n"))
     return bucketed.groupBy("side", "lvl", "sub").agg(
         F.count(F.lit(1)).cast("long").alias("weight"),
         F.min("r0").cast("long").alias("min_rank"),
@@ -1435,25 +1421,7 @@ def agg_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
         (F.row_number().over(w) - 1).cast("long").alias("r0"),
     ).withColumn("n", F.count(F.lit(1)).over(Window.partitionBy()))
-    keyed = ranked.select(
-        "cents",
-        "r0",
-        "n",
-        F.when(2 * F.col("r0") < F.col("n"), 0).otherwise(1).alias("side"),
-        F.when(2 * F.col("r0") < F.col("n"), F.col("r0") + 1)
-        .otherwise(F.col("n") - F.col("r0"))
-        .alias("dd"),
-    )
-    lvled = keyed.withColumn(
-        "lvl", (F.length(F.conv(F.col("dd").cast("string"), 10, 2)) - 1).cast("long")
-    )
-    bucketed = lvled.withColumn(
-        "sub",
-        F.floor(
-            F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {TD_SUB})")
-            / F.expr("shiftleft(1L, CAST(lvl AS INT))")
-        ).cast("long"),
-    ).persist()
+    bucketed = tdigest_cell(ranked, "r0", F.col("n")).persist()
     try:
         cent = bucketed.groupBy("side", "lvl", "sub").agg(
             F.min("r0").cast("long").alias("min_rank"),
@@ -2337,27 +2305,7 @@ def agg_tdigest_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("nh"),
     )
-    keyed = ranked.select(
-        "grp",
-        "cents",
-        "r0",
-        "nh",
-        F.when(2 * F.col("r0") < F.col("nh"), 0).otherwise(1).alias("side"),
-        F.when(2 * F.col("r0") < F.col("nh"), F.col("r0") + 1)
-        .otherwise(F.col("nh") - F.col("r0"))
-        .alias("dd"),
-    )
-    lvled = keyed.withColumn(
-        "lvl",
-        (F.length(F.conv(F.col("dd").cast("string"), 10, 2)) - 1).cast("long"),
-    )
-    bucketed = lvled.withColumn(
-        "sub",
-        F.floor(
-            F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {TD_SUB})")
-            / F.expr("shiftleft(1L, CAST(lvl AS INT))")
-        ).cast("long"),
-    ).persist()
+    bucketed = tdigest_cell(ranked, "r0", F.col("nh")).persist()
     try:
         cent = bucketed.groupBy("grp", "side", "lvl", "sub").agg(
             F.min("r0").cast("long").alias("min_rank"),
@@ -2496,26 +2444,7 @@ def agg_tdigest_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
         (F.row_number().over(w) - 1).cast("long").alias("r0"),
     ).withColumn("n", F.count(F.lit(1)).over(Window.partitionBy()))
-    keyed = ranked.select(
-        "cents",
-        "r0",
-        "n",
-        F.when(2 * F.col("r0") < F.col("n"), 0).otherwise(1).alias("side"),
-        F.when(2 * F.col("r0") < F.col("n"), F.col("r0") + 1)
-        .otherwise(F.col("n") - F.col("r0"))
-        .alias("dd"),
-    )
-    lvled = keyed.withColumn(
-        "lvl",
-        (F.length(F.conv(F.col("dd").cast("string"), 10, 2)) - 1).cast("long"),
-    )
-    bucketed = lvled.withColumn(
-        "sub",
-        F.floor(
-            F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {TD_SUB})")
-            / F.expr("shiftleft(1L, CAST(lvl AS INT))")
-        ).cast("long"),
-    ).persist()
+    bucketed = tdigest_cell(ranked, "r0", F.col("n")).persist()
     try:
         cent = bucketed.groupBy("side", "lvl", "sub").agg(
             F.min("r0").cast("long").alias("min_rank"),
@@ -2905,25 +2834,7 @@ def agg_tdigest_sketch_distributed(
     ranked = global_row_number(cents, ["cents"], id_col="rid").select(
         "cents", (F.col("rid") - 1).cast("long").alias("r0")
     )
-    keyed = ranked.select(
-        "cents",
-        "r0",
-        F.when(2 * F.col("r0") < total, 0).otherwise(1).alias("side"),
-        F.when(2 * F.col("r0") < total, F.col("r0") + 1)
-        .otherwise(F.lit(total) - F.col("r0"))
-        .alias("dd"),
-    )
-    lvled = keyed.withColumn(
-        "lvl",
-        (F.length(F.conv(F.col("dd").cast("string"), 10, 2)) - 1).cast("long"),
-    )
-    p = F.expr("shiftleft(1L, CAST(lvl AS INT))")
-    bucketed = lvled.withColumn(
-        "sub",
-        F.floor(
-            F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {TD_SUB})") / p
-        ).cast("long"),
-    )
+    bucketed = tdigest_cell(ranked, "r0", F.lit(total))
     return bucketed.groupBy("side", "lvl", "sub").agg(
         F.count(F.lit(1)).cast("long").alias("weight"),
         F.min("r0").cast("long").alias("min_rank"),

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_exporter_spark.registry import query
+from parquet_exporter_spark.sinks.writers import publish_file, publish_once, write_orc
 from parquet_exporter_spark.tables import read_table, scratch_dir, tiny_df
 
 FIXTURES = os.path.join(
@@ -688,15 +689,12 @@ def layout_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from parquet_exporter_spark.sinks.writers import write_orc
-
-    path = scratch_dir("orc_nation", os.path.join(sf_dir, "nation*"))
-    if not os.path.isdir(path):
-        nation = read_table(spark, sf_dir, "nation").select(
-            "n_nationkey", "n_name", "n_regionkey"
-        )
-        write_orc(nation, path)
-    return spark.read.orc(path).select("n_nationkey", "n_name", "n_regionkey")
+    cols = ["n_nationkey", "n_name", "n_regionkey"]
+    path = publish_once(
+        scratch_dir("orc_nation", os.path.join(sf_dir, "nation*")),
+        lambda tmp: write_orc(read_table(spark, sf_dir, "nation").select(cols), tmp),
+    )
+    return spark.read.orc(path).select(cols)
 
 
 @query(
@@ -1149,19 +1147,11 @@ def scan_nested_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _build_timetravel_table(spark: SparkSession, sf_dir: str) -> str:
     """Two deterministic commits: v1 = orders with o_orderkey % 4 <> 3,
-    v2 appends the rest. Built atomically (private temp dir + rename,
-    the persisted-index publish protocol) so concurrent sessions race
-    safely to an equivalent table."""
-    import shutil
-    import uuid
-
+    v2 appends the rest. Built once (``writers.publish_once``), so
+    concurrent sessions race safely to an equivalent table."""
     from parquet_exporter_spark.sinks.manifest_sink import commit_snapshot
 
-    path = scratch_dir("ttravel", os.path.join(sf_dir, "orders*"))
-    if os.path.isfile(os.path.join(path, "_COMPLETE")):
-        return path
-    tmp = f"{path}.build-{uuid.uuid4().hex}"
-    try:
+    def _build(tmp: str) -> None:
         orders = read_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -1180,18 +1170,10 @@ def _build_timetravel_table(spark: SparkSession, sf_dir: str) -> str:
             .parquet(tmp)
         )
         assert commit_snapshot(tmp, "o_orderkey") == 2
-        with open(os.path.join(tmp, "_COMPLETE"), "w"):
-            pass
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            if not os.path.isfile(os.path.join(path, "_COMPLETE")):
-                shutil.rmtree(path, ignore_errors=True)
-                os.rename(tmp, path)
-            # else: lost the publish race to an equivalent build
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return path
+
+    return publish_once(
+        scratch_dir("ttravel", os.path.join(sf_dir, "orders*")), _build
+    )
 
 
 @query(
@@ -1269,12 +1251,7 @@ def _build_optimize_table(spark: SparkSession, sf_dir: str) -> str:
     8 range-disjoint octile files (ntile(8) over o_orderkey — exact
     sizes, pure function of the table since o_orderkey is unique), then
     OPTIMIZE compacts them into 3 cluster-sorted files committed as v2.
-    Atomic publish (private temp dir + rename) as the other scratch
-    tables."""
-    import glob as _glob
-    import shutil
-    import uuid
-
+    Built once (``writers.publish_once``) as the other scratch tables."""
     from pyspark.sql import Window
 
     from parquet_exporter_spark.sinks.manifest_sink import (
@@ -1282,35 +1259,24 @@ def _build_optimize_table(spark: SparkSession, sf_dir: str) -> str:
         optimize_table,
     )
 
-    path = scratch_dir("optcompact", os.path.join(sf_dir, "orders*"))
-    if os.path.isfile(os.path.join(path, "_COMPLETE")):
-        return path
-    tmp = f"{path}.build-{uuid.uuid4().hex}"
-    try:
-        os.makedirs(tmp, exist_ok=True)
+    def _build(tmp: str) -> None:
+        os.makedirs(tmp)
         orders = read_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
         w = Window.orderBy("o_orderkey")
         bucketed = orders.withColumn("b", F.ntile(_OPT_FILES).over(w)).persist()
-        names = []
+        names = [f"oct-{b:02d}.parquet" for b in range(1, _OPT_FILES + 1)]
         try:
             total = bucketed.count()
-            for b in range(1, _OPT_FILES + 1):
-                staging = os.path.join(tmp, f"_staging_oct_{b}")
-                (
+            for b, fname in enumerate(names, start=1):
+                publish_file(
                     bucketed.filter(F.col("b") == b)
                     .drop("b")
                     .coalesce(1)
-                    .sortWithinPartitions("o_orderkey")
-                    .write.mode("overwrite")
-                    .parquet(staging)
+                    .sortWithinPartitions("o_orderkey"),
+                    os.path.join(tmp, fname),
                 )
-                part = _glob.glob(os.path.join(staging, "part-*.parquet"))[0]
-                fname = f"oct-{b:02d}.parquet"
-                os.replace(part, os.path.join(tmp, fname))
-                shutil.rmtree(staging, ignore_errors=True)
-                names.append(fname)
         finally:
             bucketed.unpersist()
         assert commit_snapshot(tmp, "o_orderkey", data_files=names) == 1
@@ -1318,17 +1284,10 @@ def _build_optimize_table(spark: SparkSession, sf_dir: str) -> str:
             spark, tmp, "o_orderkey", target_rows=total // _OPT_GROUPS + 1
         )
         assert v2 == 2
-        with open(os.path.join(tmp, "_COMPLETE"), "w"):
-            pass
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            if not os.path.isfile(os.path.join(path, "_COMPLETE")):
-                shutil.rmtree(path, ignore_errors=True)
-                os.rename(tmp, path)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return path
+
+    return publish_once(
+        scratch_dir("optcompact", os.path.join(sf_dir, "orders*")), _build
+    )
 
 
 @query(

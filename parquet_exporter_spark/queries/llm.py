@@ -18,6 +18,7 @@ from parquet_exporter_spark.functions import similarity as S
 from parquet_exporter_spark.functions import text as T
 from parquet_exporter_spark.registry import query
 from parquet_exporter_spark import tables
+from parquet_exporter_spark.sinks.writers import publish_once
 from parquet_exporter_spark.tables import read_table, scratch_dir, tiny_df
 
 
@@ -416,35 +417,16 @@ def _ivf_scratch_path(sf_dir: str) -> str:
     ),
 )
 def similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import uuid
-
     n_centroids = 8
     emb = read_table(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") % 10 != 0)
     batch = emb.filter(F.col("vec_id") % 10 == 0)
-    path = _ivf_scratch_path(sf_dir)
-    # Atomic build-or-reuse (same protocol as the band index): reuse only
-    # a COMPLETE index (our _COMPLETE sentinel, written after the append
-    # finishes — the per-job _SUCCESS markers land before the append);
-    # publish fresh builds via private temp dir + os.rename.
-    if not os.path.isfile(os.path.join(path, "_COMPLETE")):
-        tmp = f"{path}.build-{uuid.uuid4().hex}"
-        try:
-            S.write_ivf_index(corpus, tmp, n_centroids=n_centroids)
-            S.append_ivf_index(batch, tmp)
-            with open(os.path.join(tmp, "_COMPLETE"), "w"):
-                pass
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                if not os.path.isfile(os.path.join(path, "_COMPLETE")):
-                    shutil.rmtree(path, ignore_errors=True)
-                    os.rename(tmp, path)
-                # else: lost the publish race to an equivalent build
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+
+    def _build(tmp: str) -> None:
+        S.write_ivf_index(corpus, tmp, n_centroids=n_centroids)
+        S.append_ivf_index(batch, tmp)
+
+    path = publish_once(_ivf_scratch_path(sf_dir), _build)
     qrows = emb.filter(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
     parts = [
         S.probe_ivf_index(
@@ -1252,41 +1234,15 @@ def _incremental_index_path(sf_dir: str) -> str:
     ),
 )
 def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    import shutil
-    import uuid
-
     docs = read_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     batch = docs.filter(F.col("doc_id") % 5 == 0)
-    path = _incremental_index_path(sf_dir)
-    # Atomic build-or-reuse: reuse only a COMPLETE index (the _SUCCESS
-    # marker Spark's committer writes last), and publish a fresh build by
-    # writing to a private temp dir then os.rename-ing into place — a
-    # concurrent writer can never expose a half-written directory (Spark
-    # creates the output dir before job commit, so a bare isdir probe
-    # races), and a failed build is torn down and re-raised rather than
-    # left behind to be silently reused forever.
-    if not os.path.isfile(os.path.join(path, "_SUCCESS")):
-        tmp = f"{path}.build-{uuid.uuid4().hex}"
-        try:
-            D.write_minhash_band_index(
-                corpus, tmp, n_hashes=_LSH_P_HASHES, band_size=_LSH_P_BAND
-            )
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                if not os.path.isfile(os.path.join(path, "_SUCCESS")):
-                    # Not a lost race — a corrupt leftover (e.g. an old
-                    # crashed build with no marker) is squatting on the
-                    # path: clear it and publish this complete build.
-                    shutil.rmtree(path, ignore_errors=True)
-                    os.rename(tmp, path)
-                # else: lost the publish race; the winner's index is
-                # equivalent (the path is keyed on the source version).
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+    path = publish_once(
+        _incremental_index_path(sf_dir),
+        lambda tmp: D.write_minhash_band_index(
+            corpus, tmp, n_hashes=_LSH_P_HASHES, band_size=_LSH_P_BAND
+        ),
+    )
     return D.probe_minhash_band_index(
         spark,
         path,

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parquet_exporter_spark.registry import query
+from parquet_exporter_spark.sinks.writers import publish_once
 from parquet_exporter_spark.tables import read_table, scratch_dir
 
 # Row-pattern: "a view, then AT LEAST TWO clicks, then a purchase, with
@@ -515,10 +516,6 @@ def _rbq_scratch_path(sf_dir: str) -> str:
     ),
 )
 def similarity_rabitq_persisted_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import uuid
-
     from parquet_exporter_spark.functions.similarity import (
         probe_rabitq_index,
         write_rabitq_index,
@@ -526,22 +523,10 @@ def similarity_rabitq_persisted_probe(spark: SparkSession, sf_dir: str) -> DataF
 
     emb = read_table(spark, sf_dir, "embeddings")
     rot = emb.select("vec_id", rotate_hadamard(F.col("embedding")).alias("r"))
-    path = _rbq_scratch_path(sf_dir)
-    if not os.path.isfile(os.path.join(path, "_COMPLETE")):
-        tmp = f"{path}.build-{uuid.uuid4().hex}"
-        try:
-            write_rabitq_index(rot, tmp, dim=_RBQ_DIM)
-            with open(os.path.join(tmp, "_COMPLETE"), "w"):
-                pass
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                if not os.path.isfile(os.path.join(path, "_COMPLETE")):
-                    shutil.rmtree(path, ignore_errors=True)
-                    os.rename(tmp, path)
-                # else: lost the publish race to an equivalent build
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+    path = publish_once(
+        _rbq_scratch_path(sf_dir),
+        lambda tmp: write_rabitq_index(rot, tmp, dim=_RBQ_DIM),
+    )
     queries = rot.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("r").alias("qr")
     )

@@ -38,6 +38,8 @@ from __future__ import annotations
 import hashlib
 import os
 
+from parquet_exporter_spark.sinks.writers import replace_file
+
 BLOOM_NAME = "_bloom.parquet"
 BLOOM_M = 16384  # bits per file filter (2 KiB); n=1500 keys, k=6 -> ~0.6% FP
 BLOOM_K = 6
@@ -122,7 +124,7 @@ def build_bloom_manifest(
     Spark type is committed alongside (``dtype``) so probes render
     their literal through the identical cast chain. NULLs are skipped
     (an equality probe can never match NULL). Returns the manifest
-    path. Commit is atomic (temp + os.replace). ``manifest_dir``
+    path. Commit is atomic (``writers.replace_file``). ``manifest_dir``
     redirects the committed manifest (e.g. a scratch dir when the data
     directory is a read-only committed fixture); the production layout
     co-locates it with the data like _manifest."""
@@ -178,9 +180,7 @@ def build_bloom_manifest(
     out_dir = manifest_dir or path
     os.makedirs(out_dir, exist_ok=True)
     final = os.path.join(out_dir, BLOOM_NAME)
-    tmp = final + ".tmp"
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, final)
+    replace_file(final, lambda tmp: pq.write_table(tbl, tmp))
     return final
 
 

@@ -17,6 +17,10 @@ manifest itself is a table (thousands of rows — one per file), read once
 per query plan; the footer-walking path in sources/manifest.file_stats
 remains the bootstrap for directories nobody manifested.
 
+Data files, the manifest, the version hint and the streaming batch
+markers are published with the protocol in ``sinks/writers.py``; the
+snapshot CAS (``commit_snapshot``) is this module's own.
+
 Reference parity note: the reference engine (OpenBeta/parquet-exporter,
 export.py:238-242) writes single-file exports and has no multi-file scan
 planning; this extends the sink surface per SURVEY.md section 2's
@@ -31,6 +35,12 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
+from parquet_exporter_spark.sinks.writers import (
+    commit_marker,
+    marker_path,
+    publish_file,
+    replace_file,
+)
 from parquet_exporter_spark.sources.manifest import FileStat, file_stats, prune_by_range
 
 MANIFEST_NAME = "_manifest.parquet"
@@ -79,14 +89,10 @@ def refresh_manifest(path: str, cluster_col: str) -> list[FileStat]:
             "max_value": [s.max_value for s in stats],
         }
     )
-    # Atomic commit: write to a temp name in the same directory, then
-    # os.replace over MANIFEST_NAME — a concurrent read_manifest sees
-    # either the old complete manifest or the new one, never a torn
-    # half-written file (same-filesystem rename is atomic on POSIX).
-    final = os.path.join(path, MANIFEST_NAME)
-    tmp = final + ".tmp"
-    pq.write_table(table, tmp)
-    os.replace(tmp, final)
+    # a concurrent read_manifest sees the old manifest or the new one
+    replace_file(
+        os.path.join(path, MANIFEST_NAME), lambda tmp: pq.write_table(table, tmp)
+    )
     return stats
 
 
@@ -234,14 +240,12 @@ def _flip_hint_monotonic(path: str, version: int) -> None:
             # an old hint with a new mirror — readers resolving via the
             # hint (the versioned path) are unaffected, and the mirror
             # is re-synced by the next commit's flip.
-            cur = os.path.join(path, MANIFEST_NAME)
-            tmp = cur + f".tmp.{os.getpid()}"
-            shutil.copyfile(os.path.join(path, _snapshot_name(version)), tmp)
-            os.replace(tmp, cur)
-            tmp = hint + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(str(version))
-            os.replace(tmp, hint)
+            snap = os.path.join(path, _snapshot_name(version))
+            replace_file(
+                os.path.join(path, MANIFEST_NAME),
+                lambda tmp: shutil.copyfile(snap, tmp),
+            )
+            commit_marker(hint, version)
     finally:
         os.close(fd)
         os.unlink(lock)
@@ -430,38 +434,23 @@ def streaming_snapshot_commit(
     Wire-up: ``df.writeStream.foreachBatch(lambda b, i:
     streaming_snapshot_commit(b, i, path, col)).option(
     "checkpointLocation", ckpt).start()``."""
-    import shutil
-
     os.makedirs(path, exist_ok=True)
-    marker = os.path.join(path, f"_batch-{batch_id}.committed")
+    marker = marker_path(path, "batch", batch_id)
     if os.path.isfile(marker):
         return None  # replayed batch: fully committed before the restart
     fname = f"batch-{batch_id:08d}.parquet"
-
-    def _mark(v: int) -> None:
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, marker)
-
     committed = current_manifest_version(path)
     if committed is not None and any(
         os.path.basename(s.path) == fname
         for s in read_manifest_version(path, committed)
     ):
         # crash landed between commit and marker: heal the marker only
-        _mark(committed)
+        commit_marker(marker, committed)
         return None
-    staging = os.path.join(path, f"_staging_batch_{batch_id}")
-    (
-        batch_df.coalesce(1)
-        .sortWithinPartitions(cluster_col)
-        .write.mode("overwrite")
-        .parquet(staging)
+    publish_file(
+        batch_df.coalesce(1).sortWithinPartitions(cluster_col),
+        os.path.join(path, fname),
     )
-    part = glob.glob(os.path.join(staging, "part-*.parquet"))[0]
-    os.replace(part, os.path.join(path, fname))
-    shutil.rmtree(staging, ignore_errors=True)
     # Bounded retry on version conflicts ONLY: CommitConflictError means
     # another committer raced us to a version number and our file is
     # already on disk, so re-claiming the next version makes progress.
@@ -480,7 +469,7 @@ def streaming_snapshot_commit(
             f"{path} — a runaway concurrent committer; one streaming "
             "writer per table path is the contract"
         )
-    _mark(version)
+    commit_marker(marker, version)
     return version
 
 
@@ -506,8 +495,6 @@ def optimize_table(
     group overshoots by at most one file and compacted files keep
     DISJOINT cluster ranges, preserving manifest range-pruning
     selectivity after the rewrite."""
-    import shutil
-
     committed = current_manifest_version(path)
     if committed is None:
         raise FileNotFoundError(f"no manifest snapshot committed under {path}")
@@ -533,16 +520,11 @@ def optimize_table(
             new_files.append(os.path.basename(members[0].path))
             continue
         fname = f"compact-v{committed:04d}-g{g:04d}.parquet"
-        staging = os.path.join(path, f"_staging_compact_{committed}_{g}")
-        (
+        publish_file(
             spark.read.parquet(*[s.path for s in members])
             .coalesce(1)
-            .sortWithinPartitions(cluster_col)
-            .write.mode("overwrite")
-            .parquet(staging)
+            .sortWithinPartitions(cluster_col),
+            os.path.join(path, fname),
         )
-        part = glob.glob(os.path.join(staging, "part-*.parquet"))[0]
-        os.replace(part, os.path.join(path, fname))
-        shutil.rmtree(staging, ignore_errors=True)
         new_files.append(fname)
     return commit_snapshot(path, cluster_col, data_files=new_files)

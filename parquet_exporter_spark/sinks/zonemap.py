@@ -30,6 +30,8 @@ from __future__ import annotations
 import glob
 import os
 
+from parquet_exporter_spark.sinks.writers import replace_file
+
 ZONEMAP_NAME = "_zonemap.parquet"
 
 
@@ -37,11 +39,10 @@ def write_zonemap(
     path: str, columns: list[str], manifest_dir: str | None = None
 ) -> str:
     """Gather per-file min/max for each of ``columns`` from the parquet
-    footers under ``path`` and commit ``_zonemap.parquet`` (atomic
-    temp + os.replace). Returns the manifest path. ``manifest_dir``
+    footers under ``path`` and commit ``_zonemap.parquet`` (atomically,
+    ``writers.replace_file``). Returns the manifest path. ``manifest_dir``
     redirects the commit (read-only source dirs); production co-locates
     it with the data like ``_manifest``."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     files = sorted(
@@ -81,6 +82,13 @@ def write_zonemap(
                     "hi_str": hi if is_str else None,
                 }
             )
+    return _commit_zonemap(rows, manifest_dir or path)
+
+
+def _commit_zonemap(rows: list[dict], out_dir: str) -> str:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     tbl = pa.Table.from_pylist(
         rows,
         schema=pa.schema(
@@ -95,12 +103,9 @@ def write_zonemap(
             ]
         ),
     )
-    out_dir = manifest_dir or path
     os.makedirs(out_dir, exist_ok=True)
     final = os.path.join(out_dir, ZONEMAP_NAME)
-    tmp = final + ".tmp"
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, final)
+    replace_file(final, lambda tmp: pq.write_table(tbl, tmp))
     return final
 
 
@@ -123,9 +128,6 @@ def write_zonemap_distributed(
     missing column (re-raised on the driver), same row order (files
     sorted, columns in call order), same committed schema — the suite
     pins byte-level row equality against the driver walk."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     files = sorted(
         p
         for p in glob.glob(os.path.join(path, "*.parquet"))
@@ -241,27 +243,7 @@ def write_zonemap_distributed(
         for p in files
         for r in (by_key[(os.path.basename(p), c)] for c in cols)
     ]
-    tbl = pa.Table.from_pylist(
-        rows,
-        schema=pa.schema(
-            [
-                ("file_name", pa.string()),
-                ("column", pa.string()),
-                ("num_rows", pa.int64()),
-                ("lo_num", pa.float64()),
-                ("hi_num", pa.float64()),
-                ("lo_str", pa.string()),
-                ("hi_str", pa.string()),
-            ]
-        ),
-    )
-    out_dir = manifest_dir or path
-    os.makedirs(out_dir, exist_ok=True)
-    final = os.path.join(out_dir, ZONEMAP_NAME)
-    tmp = final + ".tmp"
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, final)
-    return final
+    return _commit_zonemap(rows, manifest_dir or path)
 
 
 def prune_with_zonemap(

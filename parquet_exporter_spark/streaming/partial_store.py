@@ -1,20 +1,17 @@
 """Append-only partial-sketch store shared by the streaming sketch
 maintainers (t-digest, HLL, HDR, CMS, KMV): one immutable parquet file
-per committed micro-batch plus a durable marker.
+per committed micro-batch plus a durable marker, published with the
+protocol in ``sinks/writers.py``.
 
-Exactly-once is simpler than the SCD2 generational protocol because
-partials are immutable and append-only: a replay of a committed batch
-is a marker-checked no-op, a crash before the marker leaves an orphan
-file no reader resolves (readers glob only batches with committed
-markers), and the replay overwrites the orphan with identical content —
-each partial is a deterministic function of its batch.
+Partials are immutable and append-only, so the publish needs no
+generations: a replay of a committed batch is a marker-checked no-op,
+and a crash before the marker leaves an orphan file no reader resolves,
+which the replay overwrites with identical content.
 
 A COMPACTION marker (``_compact-<B>.committed``) supersedes all batch
 partials with id <= B: readers take the newest compact file plus every
 batch partial above its bound. Superseded files are deleted only after
-the compact marker is durable — the same publish discipline as the SCD2
-fix (crash before cleanup leaves stale-but-ignored files the next
-compaction removes).
+the compact marker is durable.
 """
 
 from __future__ import annotations
@@ -26,51 +23,34 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parquet_exporter_spark.sinks.writers import (
+    commit_marker,
+    marker_ids,
+    marker_path,
+    move_parts,
+    publish_parts,
+)
+
 
 def committed_batches(store_dir: str) -> list[int]:
     """Batch ids with durable markers, ascending."""
-    out = []
-    for p in glob.glob(os.path.join(store_dir, "_batch-*.committed")):
-        stem = os.path.basename(p)[len("_batch-") : -len(".committed")]
-        try:
-            out.append(int(stem))
-        except ValueError:
-            continue
-    return sorted(out)
+    return marker_ids(store_dir, "batch")
 
 
 def compacted_upto(store_dir: str) -> int | None:
     """Newest compaction bound B (``_compact-<B>.committed``), or None."""
-    best = None
-    for p in glob.glob(os.path.join(store_dir, "_compact-*.committed")):
-        stem = os.path.basename(p)[len("_compact-") : -len(".committed")]
-        try:
-            b = int(stem)
-        except ValueError:
-            continue
-        if best is None or b > best:
-            best = b
-    return best
+    return max(marker_ids(store_dir, "compact"), default=None)
 
 
 def commit_partial(df: DataFrame, batch_id: int, store_dir: str) -> bool:
     """Commit one micro-batch's partial rows. False on replay of an
     already-committed batch, True after a commit."""
     os.makedirs(store_dir, exist_ok=True)
-    marker = os.path.join(store_dir, f"_batch-{batch_id}.committed")
+    marker = marker_path(store_dir, "batch", batch_id)
     if os.path.isfile(marker):
         return False
-    staging = os.path.join(store_dir, f"_staging_batch_{batch_id}")
-    df.coalesce(1).write.mode("overwrite").parquet(staging)
-    prefix = f"cent-{batch_id:08d}-"
-    for p in glob.glob(os.path.join(store_dir, prefix + "*.parquet")):
-        os.unlink(p)
-    for i, part in enumerate(
-        sorted(glob.glob(os.path.join(staging, "part-*.parquet")))
-    ):
-        os.replace(part, os.path.join(store_dir, f"{prefix}{i:04d}.parquet"))
-    shutil.rmtree(staging, ignore_errors=True)
-    _write_marker(marker, batch_id)
+    publish_parts(df, store_dir, f"cent-{batch_id:08d}-")
+    commit_marker(marker, batch_id)
     return True
 
 
@@ -102,7 +82,7 @@ def commit_partials_batched(
     todo = [
         b
         for b in batch_ids
-        if not os.path.isfile(os.path.join(store_dir, f"_batch-{b}.committed"))
+        if not os.path.isfile(marker_path(store_dir, "batch", b))
     ]
     if not todo:
         return 0
@@ -116,27 +96,18 @@ def commit_partials_batched(
         .parquet(staging)
     )
     for b in todo:
+        prefix = f"cent-{b:08d}-"
         files = sorted(
             glob.glob(os.path.join(staging, f"{batch_col}={b}", "*.parquet"))
         )
-        if not files:
+        if files:
+            move_parts(files, store_dir, prefix)
+        else:
             # empty batch: publish an empty single-file partial so readers
             # (which treat a marker without files as corruption) stay sound
-            empty_dir = os.path.join(staging, f"_empty_{b}")
-            (
-                tagged.filter(F.lit(False))
-                .drop(batch_col)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(empty_dir)
-            )
-            files = sorted(glob.glob(os.path.join(empty_dir, "part-*.parquet")))
-        prefix = f"cent-{b:08d}-"
-        for p in glob.glob(os.path.join(store_dir, prefix + "*.parquet")):
-            os.unlink(p)
-        for i, part in enumerate(files):
-            os.replace(part, os.path.join(store_dir, f"{prefix}{i:04d}.parquet"))
-        _write_marker(os.path.join(store_dir, f"_batch-{b}.committed"), b)
+            empty = tagged.filter(F.lit(False)).drop(batch_col)
+            publish_parts(empty, store_dir, prefix)
+        commit_marker(marker_path(store_dir, "batch", b), b)
     shutil.rmtree(staging, ignore_errors=True)
     return len(todo)
 
@@ -196,18 +167,8 @@ def commit_compaction(
     prev = compacted_upto(store_dir)
     if prev is not None and prev >= upto_batch:
         return False
-    marker = os.path.join(store_dir, f"_compact-{upto_batch}.committed")
-    staging = os.path.join(store_dir, f"_staging_compact_{upto_batch}")
-    folded.coalesce(1).write.mode("overwrite").parquet(staging)
-    prefix = f"compact-{upto_batch:08d}-"
-    for p in glob.glob(os.path.join(store_dir, prefix + "*.parquet")):
-        os.unlink(p)
-    for i, part in enumerate(
-        sorted(glob.glob(os.path.join(staging, "part-*.parquet")))
-    ):
-        os.replace(part, os.path.join(store_dir, f"{prefix}{i:04d}.parquet"))
-    shutil.rmtree(staging, ignore_errors=True)
-    _write_marker(marker, upto_batch)
+    final = publish_parts(folded, store_dir, f"compact-{upto_batch:08d}-")
+    commit_marker(marker_path(store_dir, "compact", upto_batch), upto_batch)
     # cleanup AFTER the durable marker: superseded batch partials and
     # older compact generations (their markers stay as replay guards)
     for b in committed_batches(store_dir):
@@ -217,7 +178,7 @@ def commit_compaction(
             ):
                 os.unlink(p)
     for p in glob.glob(os.path.join(store_dir, "compact-*.parquet")):
-        if not os.path.basename(p).startswith(prefix):
+        if p not in final:
             os.unlink(p)
     return True
 
@@ -237,11 +198,3 @@ def compact_partials(spark, store_dir: str, upto_batch: int, fold) -> bool:
         return False
     return commit_compaction(fold(old), upto_batch, store_dir)
 
-
-def _write_marker(marker: str, payload: int) -> None:
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(payload))
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, marker)

@@ -13,17 +13,12 @@ warehouse actually runs between full rebuilds. Per batch:
   re-derives validity — the first new change closes the old open
   version, tombstones close without emitting, and the last surviving
   change stays open. Unaffected keys are carried through untouched.
-- The updated dimension is published as a new immutable GENERATION:
-  data files land under batch-scoped names, then a per-batch marker
-  commits them. Readers (``read_scd2_dim``) resolve the current
-  generation FROM THE NEWEST COMMITTED MARKER — never by globbing all
-  dim files — so an uncommitted generation from a crashed attempt is
-  invisible, a replay recomputes from the same committed input and
-  overwrites the orphan, and superseded generations are deleted only
-  AFTER the new marker is durable (a crash before cleanup leaves
-  stale-but-ignored files that the next successful batch removes).
-  This is what makes the exactly-once claim actually hold: the input
-  to a replayed batch is immutable until its marker lands.
+- The updated dimension is published as a new immutable GENERATION
+  with the protocol in ``sinks/writers.py``: batch-scoped data files,
+  then a per-batch marker. Readers (``read_scd2_dim``) resolve the
+  current generation from the newest committed marker, never by
+  globbing all dim files, so the input to a replayed batch is immutable
+  until its marker lands — which is what makes exactly-once hold.
 
 INVARIANT (asserted): batches must arrive in event-time order per key —
 every new change ts must be STRICTLY GREATER than the affected key's
@@ -54,24 +49,16 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _committed_generation(dim_dir: str) -> int | None:
-    """Newest committed batch id, or None before the first commit."""
-    best = None
-    for p in glob.glob(os.path.join(dim_dir, "_batch-*.committed")):
-        stem = os.path.basename(p)[len("_batch-") : -len(".committed")]
-        try:
-            b = int(stem)
-        except ValueError:
-            continue
-        if best is None or b > best:
-            best = b
-    return best
+from parquet_exporter_spark.sinks.writers import (
+    commit_marker,
+    marker_ids,
+    marker_path,
+    publish_parts,
+)
 
 
 def read_scd2_dim(spark, dim_dir: str) -> DataFrame | None:
@@ -81,9 +68,10 @@ def read_scd2_dim(spark, dim_dir: str) -> DataFrame | None:
     uncommitted generation left by a crashed ``scd2_apply_batch`` is
     never read (its replay will overwrite it), and stale generations
     awaiting post-marker cleanup are ignored."""
-    gen = _committed_generation(dim_dir)
-    if gen is None:
+    gens = marker_ids(dim_dir, "batch")
+    if not gens:
         return None
+    gen = gens[-1]
     files = sorted(glob.glob(os.path.join(dim_dir, f"dim-{gen:08d}-*.parquet")))
     if not files:
         raise FileNotFoundError(
@@ -102,7 +90,7 @@ def scd2_apply_batch(batch_df: DataFrame, batch_id: int, dim_dir: str) -> bool:
 
     spark = batch_df.sparkSession
     os.makedirs(dim_dir, exist_ok=True)
-    marker = os.path.join(dim_dir, f"_batch-{batch_id}.committed")
+    marker = marker_path(dim_dir, "batch", batch_id)
     if os.path.isfile(marker):
         return False  # replay of a fully-committed batch
     changes = batch_df.select("ts_ms", "op", "key_id", "name", "balance")
@@ -176,35 +164,9 @@ def scd2_apply_batch(batch_df: DataFrame, batch_id: int, dim_dir: str) -> bool:
     out = new_dim.select(
         "key_id", "name", "balance", "valid_from_ms", "valid_to_ms", "is_current"
     ).withColumn("version_seq", F.row_number().over(wseq).cast("long"))
-    staging = os.path.join(dim_dir, f"_staging_batch_{batch_id}")
-    out.coalesce(1).write.mode("overwrite").parquet(staging)
-    # publish protocol (exactly-once under crash-at-any-point):
-    #   1. clear any leftover files of THIS generation (crashed attempt)
-    #   2. move the staged files in under batch-scoped names — readers
-    #      resolve via the newest committed marker, so these are
-    #      invisible until step 3
-    #   3. durably commit the marker (tmp + fsync + rename)
-    #   4. only then delete superseded generations — a crash anywhere
-    #      before 3 leaves the previous generation intact as the replay
-    #      input; a crash between 3 and 4 leaves stale-but-ignored
-    #      files that the next successful batch removes
-    gen_prefix = f"dim-{batch_id:08d}-"
-    for p in glob.glob(os.path.join(dim_dir, gen_prefix + "*.parquet")):
-        os.unlink(p)
-    final_files = []
-    for i, part in enumerate(
-        sorted(glob.glob(os.path.join(staging, "part-*.parquet")))
-    ):
-        dest = os.path.join(dim_dir, f"{gen_prefix}{i:04d}.parquet")
-        os.replace(part, dest)
-        final_files.append(dest)
-    shutil.rmtree(staging, ignore_errors=True)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, marker)
+    final_files = publish_parts(out, dim_dir, f"dim-{batch_id:08d}-")
+    commit_marker(marker, batch_id)
+    # superseded generations go only after the durable marker
     for p in glob.glob(os.path.join(dim_dir, "dim-*.parquet")):
         if p not in final_files:
             os.unlink(p)

@@ -68,6 +68,7 @@ from parquet_exporter_spark.streaming.partial_store import (
 
 __all__ = [
     "TD_SUB",
+    "tdigest_cell",
     "tdigest_partial",
     "tdigest_apply_batch",
     "committed_batches",
@@ -78,6 +79,32 @@ __all__ = [
 ]
 
 TD_SUB = 4  # sub-buckets per dyadic level: rank error <= d/4 at tail-distance d
+
+
+def tdigest_cell(df: DataFrame, rank: str, n, suffix: str = "") -> DataFrame:
+    """``df`` plus the dyadic t-digest cell of the 0-based ``rank`` among
+    ``n`` (a Column) rows: ``side`` (0 = lower half), ``dd`` (1-based
+    distance to the nearer tail), ``lvl`` = floor(log2 dd) (bit length
+    via base-2 rendering) and ``sub``, the ``TD_SUB``-way split of the
+    level. Exact integer arithmetic. Every column name takes ``suffix``
+    (the merge re-bin's ``*2`` cells)."""
+    side, dd, lvl, sub = (c + suffix for c in ("side", "dd", "lvl", "sub"))
+    lower = 2 * F.col(rank) < n
+    p2 = f"shiftleft(1L, CAST({lvl} AS INT))"
+    return (
+        df.select(
+            "*",
+            F.when(lower, 0).otherwise(1).alias(side),
+            F.when(lower, F.col(rank) + 1).otherwise(n - F.col(rank)).alias(dd),
+        )
+        .withColumn(
+            lvl, (F.length(F.conv(F.col(dd).cast("string"), 10, 2)) - 1).cast("long")
+        )
+        .withColumn(
+            sub,
+            F.floor(F.expr(f"(({dd} - {p2}) * {TD_SUB})") / F.expr(p2)).cast("long"),
+        )
+    )
 
 
 def tdigest_partial(
@@ -112,25 +139,7 @@ def tdigest_partial(
         (F.row_number().over(wo) - 1).cast("long").alias("r0"),
         F.count(F.lit(1)).over(wc).cast("long").alias("nb"),
     )
-    keyed = ranked.select(
-        *keep,
-        "cents",
-        F.when(2 * F.col("r0") < F.col("nb"), 0).otherwise(1).alias("side"),
-        F.when(2 * F.col("r0") < F.col("nb"), F.col("r0") + 1)
-        .otherwise(F.col("nb") - F.col("r0"))
-        .alias("dd"),
-    )
-    lvled = keyed.withColumn(
-        "lvl",
-        (F.length(F.conv(F.col("dd").cast("string"), 10, 2)) - 1).cast("long"),
-    )
-    p2 = F.expr("shiftleft(1L, CAST(lvl AS INT))")
-    bucketed = lvled.withColumn(
-        "sub",
-        F.floor(
-            F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {TD_SUB})") / p2
-        ).cast("long"),
-    )
+    bucketed = tdigest_cell(ranked, "r0", F.col("nb"))
     keys = ([batch_col] if batch_col else []) + ["side", "lvl", "sub"]
     return bucketed.groupBy(*keys).agg(
         F.count(F.lit(1)).cast("long").alias("w"),
@@ -201,24 +210,7 @@ def merge_tdigest(cent: DataFrame) -> DataFrame:
         .cast("long"),
     )
     rekeyed = ordered.withColumn("mid", F.col("cw") + F.expr("(w - 1) div 2"))
-    resided = rekeyed.select(
-        "*",
-        F.when(2 * F.col("mid") < F.col("n"), 0).otherwise(1).alias("side2"),
-        F.when(2 * F.col("mid") < F.col("n"), F.col("mid") + 1)
-        .otherwise(F.col("n") - F.col("mid"))
-        .alias("dd2"),
-    )
-    relvled = resided.withColumn(
-        "lvl2",
-        (F.length(F.conv(F.col("dd2").cast("string"), 10, 2)) - 1).cast("long"),
-    )
-    q2 = F.expr("shiftleft(1L, CAST(lvl2 AS INT))")
-    mbucket = relvled.withColumn(
-        "sub2",
-        F.floor(
-            F.expr(f"((dd2 - shiftleft(1L, CAST(lvl2 AS INT))) * {TD_SUB})") / q2
-        ).cast("long"),
-    )
+    mbucket = tdigest_cell(rekeyed, "mid", F.col("n"), "2")
     return mbucket.groupBy("side2", "lvl2", "sub2").agg(
         F.sum("w").cast("long").alias("weight"),
         F.min("lo").cast("long").alias("mlo"),

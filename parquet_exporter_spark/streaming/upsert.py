@@ -4,11 +4,12 @@ view holding the LATEST row per key as a stream flows in.
 Plain file sinks can only append; upsert semantics need a merge per
 micro-batch, which is exactly what foreachBatch is for: the batch
 DataFrame unions with the current view, a per-key window keeps the
-newest row, and the result replaces the view via write-to-side +
-directory swap (a parquet path cannot be overwritten while a plan is
-reading it).
+newest row, and the result replaces the view through
+``sinks/writers.write_atomic_parquet`` (a parquet path cannot be
+overwritten while a plan is reading it, and the symlink flip leaves no
+moment at which the view is missing).
 
-Scale note: the swap rewrites the whole view each batch — fine for a
+Scale note: the publish rewrites the whole view each batch — fine for a
 bounded key space (a dimension table fed by CDC), wrong for an unbounded
 one. At 100 TB the same foreachBatch body would target a transactional
 table format's MERGE (Delta/Iceberg/Hudi) so only touched files rewrite;
@@ -18,10 +19,11 @@ the streaming-side wiring here is identical.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from parquet_exporter_spark.sinks.writers import write_atomic_parquet
 
 
 def merge_latest(current: DataFrame | None, batch: DataFrame, key_col: str, ts_col: str) -> DataFrame:
@@ -60,16 +62,11 @@ def upsert_to_parquet(
     same timestamps -> same view), giving end-to-end effectively-once."""
 
     def _merge(batch_df: DataFrame, _batch_id: int) -> None:
-        spark = batch_df.sparkSession
         current = None
         if os.path.isdir(view_path):
-            current = spark.read.parquet(view_path)
+            current = batch_df.sparkSession.read.parquet(view_path)
         latest = merge_latest(current, batch_df, key_col, ts_col)
-        side = view_path + ".__new"
-        latest.write.mode("overwrite").parquet(side)
-        if os.path.isdir(view_path):
-            shutil.rmtree(view_path)
-        os.replace(side, view_path)
+        write_atomic_parquet(latest, view_path)
 
     writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
     if checkpoint_dir is not None:
